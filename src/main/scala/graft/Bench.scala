@@ -194,7 +194,7 @@ object Bench {
     // instead of reporting a flattering number.
     val brutePlan = bruteK100().queryExecution.optimizedPlan.toString
     require(
-      !brutePlan.contains("IvfCandidateScan") && !brutePlan.contains("MeteredFetch") &&
+      !brutePlan.contains("IvfCandidateFilter") && !brutePlan.contains("MeteredFetch") &&
         !brutePlan.contains("LeftSemi"),
       s"bench baseline is contaminated by the IVF rewrite:\n$brutePlan")
     materialize(bruteK100()); materialize(indexedK100()); materialize(searchK100()) // warm

@@ -277,11 +277,11 @@ object Queries {
        |ORDER BY vec_id""".stripMargin
 
   /** FILTERED cosine top-k through the SQL rewrite — the LLM-retrieval
-    * staple (`WHERE lang = 'en' ORDER BY cosine DESC LIMIT k`). A residual
-    * WHERE rules out the winner-first feed (post-filter semantics must see
-    * every candidate row), so the rule grafts the ANGULAR one-phase
-    * candidate feed: `IvfCandidateScanExec` probes cells by centroid
-    * cosine, and the untouched Filter + Sort above re-rank exactly. nprobe
+    * staple (`WHERE lang = 'en' ORDER BY cosine DESC LIMIT k`). The rule
+    * grafts the ANGULAR in-task candidate filter: `IvfCandidateFilterExec`
+    * probes cells by centroid cosine inside the scan task, and the
+    * untouched Filter + Sort above see every candidate row (post-filter
+    * semantics) and re-rank exactly. nprobe
     * is exhaustive here so the result hash-gates against DuckDB; the
     * production operating point is the same plan at nprobe ≪ nClusters.
     */

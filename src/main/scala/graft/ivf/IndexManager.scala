@@ -4,6 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Process-wide cache of built IVF indexes, keyed by (table path, column).
   * `ensure` builds with the reference's default parameters on first use and
@@ -21,11 +22,15 @@ object IndexManager {
 
   private val cache = TrieMap.empty[(String, String), TableIndex]
 
-  /** Enumerate data files from the driver-side file index (no scan job);
-    * canonical form matches `_metadata.file_path` and the store keys.
+  private val ListingSchema = StructType(Seq(StructField("_", LongType)))
+
+  /** Enumerate data files from the driver-side file index, canonical form
+    * matching `_metadata.file_path` and the store keys, sorted. The reader
+    * gets a placeholder schema: without one, Spark runs a schema-inference
+    * job over the footers, and only the file list is wanted here.
     */
   def listFiles(spark: SparkSession, path: String): Seq[String] =
-    spark.read.parquet(path).inputFiles.toSeq
+    spark.read.schema(ListingSchema).parquet(path).inputFiles.toSeq
       .map(IndexStore.canonicalPath)
       .sorted
 

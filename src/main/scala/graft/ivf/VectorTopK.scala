@@ -20,26 +20,23 @@ import graft.functions.{array_distance, float_vector}
   *    rank candidates; phase 2 materializes the k winners eagerly (the
   *    reference TopkBuilder's shape) and fetches their payload rows from
   *    ONLY the files that hold them — payload IO is ≤ k files of the
-  *    projected columns, not a table scan. (The SQL rewrite keeps a fully
-  *    LAZY plan, so its phase-2 stays a broadcast semi-join over the
-  *    column-pruned scan — lazy plans cannot prune files they have not
-  *    executed yet.);
-  *  - indexed with a residual filter = one-phase: a semi-join of the scan
-  *    against the candidate (file, row ordinal) feed emitted by
-  *    `IvfCandidateScanExec` (the reference's per-scan-file
-  *    `VectorIndexScanExec` distribution shape) → residual filter →
-  *    metered fetch → heap top-k. Candidate pruning composes with later
-  *    filters in post-filter order, matching the reference's semantics
-  *    (`src/df_vector/tests.rs:151-241`): a restrictive filter may return
-  *    fewer than k rows, and the filter must see full candidate rows
-  *    BEFORE the top-k, which rules out the winner-first shortcut.
+  *    projected columns, not a table scan;
+  *  - indexed with a residual filter = one pass: the scan re-read under
+  *    [[graft.plans.IvfCandidateFilter]], which probes each file's index
+  *    inside the scan task (the reference's per-scan-file
+  *    `VectorIndexScanExec` shape) → residual filter → metered fetch →
+  *    heap top-k, all in one Spark job. Candidate pruning composes with
+  *    later filters in post-filter order, matching the reference's
+  *    semantics (`src/df_vector/tests.rs:151-241`): a restrictive filter
+  *    may return fewer than k rows. The SQL rewrite
+  *    ([[graft.plans.VectorTopKRule]]) runs every float top-k this way.
+  *    The scan reads only the narrow columns; the candidate filter
+  *    fetches the float vectors of the passing rows (`SelectiveFetch`), so
+  *    a winner-first split would save nothing.
   *
   * Scale: the driver only peeks index HEADERS (dim/k, a ~26-byte read per
-  * file) for validation and estimates candidate volume from one file;
-  * probing — footer reads and posting-list decodes — happens on executors.
-  * The candidate feed joins by stats-driven strategy: small candidate sets
-  * broadcast, large ones fall back to a shuffle join instead of funnelling
-  * through the driver.
+  * file) for validation; probing — footer reads and posting-list decodes —
+  * happens on executors.
   */
 object VectorTopK {
 
@@ -67,8 +64,8 @@ object VectorTopK {
   /** Round-robin fairness cap across files so one file cannot starve the
     * others (reference `CandidateCursor`: `src/df_vector/access.rs:193-243`).
     * Used when the per-file lists are already materialized;
-    * [[graft.plans.IvfCandidateScan.roundRobinQuotas]] is the counts-only
-    * twin used by the distributed scan.
+    * [[graft.plans.IvfCandidateFilter.roundRobinQuotas]] is the counts-only
+    * twin used by the distributed paths.
     */
   def capRoundRobin(
       perFile: Seq[(String, Array[Int])], cap: Int): Seq[(String, Array[Int])] = {
@@ -93,8 +90,9 @@ object VectorTopK {
     perFile.zipWithIndex.map { case ((file, _), i) => (file, out(i).result().toArray) }
   }
 
-  /** Candidate-pruned scan with `_file`/`_ri` metadata columns retained —
-    * the plan-integrated (semi-join) fetch behind [[indexed]].
+  /** The table re-read restricted to IVF candidate rows by the in-task
+    * [[graft.plans.IvfCandidateFilter]] — the plan-integrated fetch behind
+    * the filtered [[indexed]].
     */
   private def candidateScan(
       spark: SparkSession,
@@ -103,13 +101,12 @@ object VectorTopK {
       query: Seq[Float],
       options: Options,
       store: IndexStore): DataFrame = {
-    val base = spark.read.parquet(path)
     val files = IndexManager.listFiles(spark, path)
     require(files.nonEmpty, s"no parquet files under $path")
     val q = query.toArray
 
     // driver-side validation is header-peek only (O(files) tiny reads);
-    // posting lists are probed executor-side by IvfCandidateScanExec
+    // posting lists are probed executor-side by the candidate filter
     IndexStore.memoizedTableProbe(
       s"validate-float-${q.length}", column, files, store.dir) {
       files.foreach { file =>
@@ -121,40 +118,18 @@ object VectorTopK {
           s"query dim ${q.length} != index dim $dim for $file")
       }
     }
-    val est = estimateCandidates(store, files, column, q, options)
-
     graft.Graft.installStrategy(spark)
-    val candDf = graft.plans.IvfCandidateScan
-      .df(spark, column, query, options.nprobe, options.maxCandidates,
-        files, store.dir, est)
-      .toDF("_file", "_ri")
-    val estBytes = est * graft.plans.IvfCandidateScan.estRowBytes(files)
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    // threshold < 0 = auto-broadcast disabled by the user: never force it
-    // (shuffle join instead); 2x safety factor on the one-file estimate
-    val candSide =
-      if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(candDf) else candDf
-
-    base
-      .withColumn("_file", col("_metadata.file_path"))
-      .withColumn("_ri", col("_metadata.row_index"))
-      .join(candSide, Seq("_file", "_ri"), "left_semi")
+    import graft.plans.IvfCandidateFilter
+    IvfCandidateFilter
+      .over(IvfCandidateFilter.keyed(spark.read.parquet(path)), graft.plans.CandidateProbe(
+        column, query, options.nprobe, store.dir, cosine = false,
+        options.maxCandidates, files))
+      .drop(IvfCandidateFilter.FileCol, IvfCandidateFilter.RowIndexCol)
   }
 
-  /** One full index load (the first file) scaled by file count — an O(1)
-    * driver estimate feeding broadcast-vs-shuffle selection.
-    */
-  private def estimateCandidates(
-      store: IndexStore,
-      files: Seq[String],
-      column: String,
-      q: Array[Float],
-      options: Options): Long = {
-    val first = scala.util.Try(IndexManager.loadIndex(store, files.head, column)).toOption
-    val perFile = first.map(_.candidateCount(q, options.nprobe)).getOrElse(0L)
-    val total = perFile * files.size
-    options.maxCandidates.fold(total)(c => math.min(c.toLong, total))
-  }
+  /** Estimated bytes per (path, ordinal) key row, for broadcast sizing. */
+  private[graft] def keyRowBytes(files: Seq[String]): Long =
+    files.headOption.map(_.length.toLong).getOrElse(64L) + 32L
 
   /** Wrap in the fetch-metering node (`embeddings_fetched` /
     * `batches_fetched` SQLMetrics, post-filter like the reference).
@@ -266,7 +241,6 @@ object VectorTopK {
         // post-filter semantics: the residual prunes candidates BEFORE the
         // top-k, so full candidate rows must be fetched — one-phase plan
         val scan = candidateScan(spark, path, column, query, options, store)
-          .drop("_file", "_ri")
         bruteForce(meterFetch(spark, scan.where(residual)), column, query, k)
       case None =>
         // two-phase (the reference's access plan): phase 1 ranks candidates
@@ -373,8 +347,7 @@ object VectorTopK {
     searchByFiles(spark, files, column, query, options, store, cosine)
   }
 
-  /** Files-list form of the phase-1 pipeline — also the winner feed for
-    * [[graft.plans.VectorTopKRule]]'s filter-free SQL rewrite.
+  /** Files-list form of the phase-1 pipeline.
     *
     * `cosine = true` switches to the angular metric: cells are probed by
     * centroid cosine ([[IvfIndex.findClosestCentroidsCosine]]) and `_dist`
@@ -413,19 +386,9 @@ object VectorTopK {
     val colName = column
     val nprobe = options.nprobe
     val angular = cosine
-    // fairness cap, two-phase like IvfCandidateScanExec
-    val quotas: Option[Map[String, Long]] = options.maxCandidates.map { cap =>
-      val counts = sc.parallelize(files.zipWithIndex, slices)
-        .map { case (f, i) =>
-          val idx = IndexManager.loadIndex(store, f, colName)
-          val probed =
-            if (angular) idx.findClosestCentroidsCosine(q, nprobe)
-            else idx.findClosestCentroids(q, nprobe)
-          (i, probed.map(idx.invertedLists(_).length.toLong).sum)
-        }
-        .collect().sortBy(_._1).map(_._2)
-      files.zip(graft.plans.IvfCandidateScan.roundRobinQuotas(counts, cap.toLong)).toMap
-    }
+    // fairness cap, as in the SQL rewrite's candidate filter
+    val quotas = graft.plans.IvfCandidateFilter.quotas(sc, graft.plans.CandidateProbe(
+      column, query, nprobe, store.dir, cosine, options.maxCandidates, files))
     val withQuota = files.map(f => (f, quotas.fold(Long.MaxValue)(_(f))))
     val results = sc.parallelize(withQuota, slices).flatMap { case (file, quota) =>
       val index = IndexManager.loadIndex(store, file, colName)
@@ -448,86 +411,6 @@ object VectorTopK {
       }
     }
     spark.createDataset(results).toDF("_file", "_ri", "_dist")
-  }
-
-  /** Winner feed with the reference's round-robin `max_candidates` fairness
-    * cap, computed entirely INSIDE the plan — no job at construction time,
-    * which is what lets [[graft.plans.VectorTopKRule]] keep the two-phase
-    * winner-first shape under a cap (a rule must not run Spark jobs at
-    * optimization time, so the driver-side quota water-fill of
-    * [[graft.plans.IvfCandidateScanExec]] is off limits there).
-    *
-    * The trick: round-robin selection across files in probe order IS the
-    * `cap`-prefix of candidates sorted by `(probe-order position,
-    * file index)` — round p takes every file's p-th candidate in file
-    * order, exactly the water-fill + remainder state
-    * ([[graft.plans.IvfCandidateScan.roundRobinQuotas]]). Each task emits
-    * its files' candidates tagged with position; `orderBy(pos, fileIdx)
-    * .limit(cap)` plans as a distributed TakeOrdered bounded by `cap`;
-    * the survivors regroup per file for the selective embedding fetch.
-    *
-    * The limit funnels `cap` rows through one partition — fine for what
-    * the cap IS (a small-result fairness knob, like the reference's
-    * `max_candidates`); a cap large enough to make that a bottleneck is
-    * equivalent to no cap, where the uncapped winner feed applies — caps
-    * past [[CapFunnelWarnRows]] log a warning to that effect.
-    */
-  private[graft] val CapFunnelWarnRows = 1000000
-
-  private[graft] def cappedWinnersByFiles(
-      spark: SparkSession,
-      files: Seq[String],
-      column: String,
-      query: Seq[Float],
-      nprobe: Int,
-      cap: Int,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame = {
-    import spark.implicits._
-    require(files.nonEmpty, "no parquet files to search")
-    require(cap >= 0, s"maxCandidates must be >= 0, got $cap")
-    if (cap > CapFunnelWarnRows) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"maxCandidates=$cap funnels the cap-prefix through a single " +
-          s"partition (fairness-cap semantics); caps past ~$CapFunnelWarnRows " +
-          "rows approximate no cap — consider dropping maxCandidates to use " +
-          "the uncapped winner feed instead")
-    }
-    val q = query.toArray
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
-    val colName = column
-    val np = nprobe
-    val angular = cosine
-    val positioned = sc.parallelize(files.zipWithIndex, slices).flatMap {
-      case (file, fi) =>
-        val index = IndexManager.loadIndex(store, file, colName)
-        require(
-          index.dim == q.length,
-          s"query dim ${q.length} != index dim ${index.dim} for $file")
-        val cands =
-          if (angular) index.candidateRowsCosine(q, np) else index.candidateRows(q, np)
-        Iterator.tabulate(cands.length)(p => (file, fi, p, cands(p)))
-    }
-    val capped = spark.createDataset(positioned)
-      .toDF("_file", "_fi", "_pos", "_ri")
-      .orderBy(col("_pos"), col("_fi"))
-      .limit(cap)
-      .select(col("_file"), col("_ri"))
-    capped.as[(String, Int)]
-      .groupByKey(_._1)
-      .flatMapGroups { (file, rows) =>
-        val ordinals = rows.map(_._2).toArray.sorted
-        SelectiveFetch.embeddings(file, colName, ordinals).iterator.collect {
-          case (ri, vec) if vec.length == q.length =>
-            val d =
-              if (angular) 1.0f - graft.functions.VectorKernels.cosine(vec, q)
-              else math.sqrt(
-                graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat
-            (file, ri, d)
-        }
-      }
-      .toDF("_file", "_ri", "_dist")
   }
 
   /** Brute `(_file, _ri, _dist)` over the whole table in ONE vectorized
@@ -774,7 +657,7 @@ object VectorTopK {
       .select(col("_file"), col("_ri"))
     // stats-driven broadcast like candidateScan: even below the bailout a
     // broad radius can make the key set too large to broadcast safely
-    val estBytes = est * graft.plans.IvfCandidateScan.estRowBytes(files)
+    val estBytes = est * keyRowBytes(files)
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     val winnerSide =
       if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(winners) else winners

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -21,19 +21,20 @@ import graft.ivf.IndexStore
   *
   * This is the Spark analog of the reference's
   * `VectorTopKPhysicalOptimizerRule` (`/root/reference/src/df_vector/
-  * physical.rs:20-196`), re-expressed as a logical rewrite: instead of a
-  * custom physical operator, the parquet leaf is replaced by a broadcast
-  * semi-join against a probed (file, row ordinal) feed, and the original
-  * Filter/Project chain plus Sort+Limit stay untouched above it. The feed
-  * depends on what sits below the top-k: FILTER-FREE queries get the
-  * winner-first two-phase feed (rank all candidates on selective
-  * single-column reads, semi-join only the k winners — payload IO ∝ k);
-  * queries with residual filters get the full candidate feed, because
-  * post-filter semantics must see every candidate row before the top-k.
-  * Catalyst then plans the Sort+Limit as `TakeOrderedAndProjectExec` (bounded
-  * heap — the reference's exact re-rank) and pushes residual predicates over
-  * candidate rows only (the reference's post-filter semantics,
-  * `src/df_vector/exec.rs`/`tests.rs:151-241`).
+  * physical.rs:20-196`), re-expressed as a logical rewrite: the parquet
+  * leaf is replaced by a V1 re-read keyed by `(file, row ordinal)` under an
+  * [[IvfCandidateFilter]], which probes each file's index inside the scan
+  * task and passes only candidate rows; the original Filter/Project chain
+  * plus Sort+Limit stay untouched above it. A float top-k — L2 or cosine,
+  * filter-free or filtered, capped or not — is therefore one scan in one
+  * Spark job (a `maxCandidates` cap adds its execution-time counts job),
+  * with no candidate feed, join, or broadcast. Catalyst plans the
+  * Sort+Limit as `TakeOrderedAndProjectExec` (bounded heap — the
+  * reference's exact re-rank), and residual predicates see candidate rows
+  * only (the reference's post-filter semantics,
+  * `src/df_vector/exec.rs`/`tests.rs:151-241`). The quantized tiers
+  * ([[TierKey]]) keep a broadcast semi-join against their refined winner
+  * feed, and the range rewrite a semi-join against its cell feed.
   *
   * Guard matrix mirrors `physical.rs:134-177`: single sort expression,
   * ascending, `array_distance(col, literal)` in either argument order with
@@ -60,13 +61,13 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     *
     * The non-graft-conf CONTRACT (spec-pinned in PlanCacheSpec "conf
     * boundary"): `spark.sql.autoBroadcastJoinThreshold` is part of the
-    * cache key (it decides the candidate feed's broadcast-vs-shuffle
-    * shape); every OTHER plan-affecting non-graft conf (AQE flags,
-    * parquet pushdown toggles, …) is consciously NOT keyed — a
-    * mid-session change serves the subtree optimized under the old conf.
-    * That staleness is perf-only, never correctness: the grafted semi-join
-    * subtree's results do not depend on those confs. Fix if it ever
-    * bites: fingerprint a conf epoch into the key.
+    * cache key (it decides the range feed's broadcast-vs-shuffle shape);
+    * every OTHER plan-affecting non-graft conf (AQE flags, parquet
+    * pushdown toggles, …) is consciously NOT keyed — a mid-session change
+    * serves the subtree optimized under the old conf. That staleness is
+    * perf-only, never correctness: the grafted subtree's results do not
+    * depend on those confs. Fix if it ever bites: fingerprint a conf epoch
+    * into the key.
     */
   private lazy val sessionKey: String = VectorTopKRule.sessionKeyFor(spark)
 
@@ -264,7 +265,7 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   /** True when only row-preserving Projects sit between the sort input and
-    * the scan — the precondition for the winner-first (two-phase) feed: a
+    * the scan — the precondition for a quantized tier's k-winner feed: a
     * Filter below the top-k must see full candidate rows, a Project never
     * drops rows. (A DSv2 ParquetScan keeps its data filters as a logical
     * Filter above the scan — parquet pushdown is best-effort — so a
@@ -310,11 +311,11 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }), tier, reason)
   }
 
-  /** Header-peek every file's index (cheap, driver-side) and graft
-    * `scan -> semi-join(distributed candidate feed)` in place of the bare
-    * relation, aliasing output back to the original attribute ids so the
-    * untouched parent operators still resolve. Probing itself happens
-    * executor-side inside `IvfCandidateScanExec`.
+  /** Header-peek every file's index (cheap, driver-side) and graft the
+    * candidate-restricted re-read in place of the bare relation, aliasing
+    * output back to the original attribute ids so the untouched parent
+    * operators still resolve. Probing itself happens executor-side inside
+    * [[IvfCandidateFilterExec]].
     */
   private def buildPrunedLeaf(
       leaf: ParquetLeaf,
@@ -347,12 +348,12 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       leaf.rootPaths, leaf.inputFiles, leaf.dataSchema, leaf.output.map(_.name),
       column, query, k, cosine, filterFree,
       sessionKey +: Seq(NprobeKey, MaxCandidatesKey, TierKey, StorageProfileKey,
-        OversampleKey, FilteredTierKey, TwoPhaseKey).map(kk => conf(kk, "")) :+
+        OversampleKey, FilteredTierKey).map(kk => conf(kk, "")) :+
         storeDir :+ spark.sessionState.conf.autoBroadcastJoinThreshold.toString)
     serveCachedRewrite(cacheKey, leaf, served).foreach(r => return Some(r))
     VectorTopKRule.planCacheMisses.incrementAndGet()
-    // canonical form matches `_metadata.file_path`, which the semi-join
-    // compares against
+    // canonical form matches `_metadata.file_path`, which candidate
+    // selection keys on
     val files = VectorTopKRule.internedFileList(leaf.rootPaths, leaf.inputFiles)
     if (files.isEmpty) return None
     // identity snapshot BEFORE the build; cached only if unchanged after —
@@ -373,82 +374,38 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
           graft.ivf.IndexManager.cachedPeek(store, file, column)
             .exists(_._1 == query.length))))
       return None
-    val twoPhaseOk = filterFree && conf(TwoPhaseKey, "true") == "true"
-    val candSide = if (twoPhaseOk) {
-      // winner-first (two-phase): no Filter sits below the top-k, so the k
-      // phase-1 winners ARE the result set — rank candidates on selective
-      // single-column reads, then fetch payload for k rows only. The feed
-      // is bounded by k, so broadcasting is always safe.
-      // for cosine the feed emits 1 − cos as _dist, so the same ascending
-      // winner selection serves both metrics. A candidate cap swaps in the
-      // lazily-capped phase-1 (round-robin fairness computed inside the
-      // plan — a rule must not run jobs at optimization time)
-      val (feed, tierReason) = tierFeed(files, column, query, k, nprobe, store, cosine)
-      val (phase1, tierUsed) = feed
-        .getOrElse((maxCandidates match {
-          case Some(cap) => graft.ivf.VectorTopK.cappedWinnersByFiles(
-            spark, files, column, query.toIndexedSeq, nprobe, cap, store, cosine)
-          case None => graft.ivf.VectorTopK.searchByFiles(
-            spark, files, column, query.toIndexedSeq,
-            graft.ivf.VectorTopK.Options(nprobe), store, cosine)
-        }, "float"))
-      val winners = phase1
-        .orderBy(col("_dist").asc_nulls_last)
-        .limit(k)
-        .select(col("_file").as("__file"), col("_ri").as("__ri"))
-      (broadcast(winners), tierUsed, tierReason)
-    } else filteredTierFeed(files, column, query, k, nprobe, store, cosine) match {
-      case (Some((phase1, tierUsed)), tierReason) =>
-      // FILTERED quantized shape (opt-in): the whole k·oversample survivor
-      // feed — coarse-ranked on code sidecars, exact-refined — grafts as
-      // the semi-join side, the untouched Filter re-applies its predicate
-      // to the fetched rows, and the untouched Sort re-ranks them exactly.
-      // Post-FILTER semantics are preserved by construction (every emitted
-      // row passed the original predicate — the reference's composition
-      // seam, `/root/reference/src/df_vector/access.rs:65-105`); what the
-      // tier narrows is the CANDIDATE set handed to the filter: k·oversample
-      // nearest rows instead of every probed-cell member. That is an extra
-      // approximation knob on top of nprobe — if the predicate is selective,
-      // survivors thin and fewer than k rows can come back — which is why
-      // this path requires FilteredTierKey instead of riding TierKey alone;
-      // oversample doubles as the filter-headroom control. Exactness gate:
-      // exhaustive nprobe + covering oversample make the feed ALL candidate
-      // rows, collapsing this to the float one-phase semantics (vq24/vq25).
-      // bounded by k·oversample rows of (file, ordinal) — broadcast-safe
-      (broadcast(phase1.select(col("_file").as("__file"), col("_ri").as("__ri"))),
-        tierUsed, tierReason)
-      case (None, tierReason) =>
-      // one-phase candidate feed — for cosine queries (a residual Filter or
-      // a candidate cap forced this path) the probe ranks cells by centroid
-      // cosine instead of L2, so the angular top-k's candidates are the
-      // angular neighborhood; the untouched Sort above re-ranks exactly
-      // first-file index scaled by file count: O(1) estimate for stats and
-      // broadcast-vs-shuffle selection — served by the decoded-index LRU,
-      // since this runs on EVERY optimization pass of a matching query
-      val est = {
-        val perFile = scala.util
-          .Try(graft.ivf.IndexManager.loadIndex(store, files.head, column))
-          .toOption
-          .map(_.candidateCount(query, nprobe, cosine)).getOrElse(0L)
-        maxCandidates.fold(perFile * files.size)(c =>
-          math.min(c.toLong, perFile * files.size))
-      }
-      val candDf = IvfCandidateScan.df(
-        spark, column, query.toIndexedSeq, nprobe, maxCandidates,
-        files, store.dir, est, cosine)
-      val estBytes = est * IvfCandidateScan.estRowBytes(files)
-      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-      // threshold < 0 means the user DISABLED auto-broadcast — honor it
-      // (the candidate feed can be huge at high nprobe / no cap); the 2x
-      // safety factor covers the first-file-scaled estimate under-counting
-      // (tier is float here: either none was requested, FilteredTierKey is
-      // unset — the exact default — or a sidecar was unusable and the
-      // quantized filtered shape fell back to the full candidate feed)
-      (if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(candDf) else candDf,
-        "float", tierReason)
+    val (feed, tierReason) =
+      if (filterFree) tierFeed(files, column, query, k, nprobe, store, cosine)
+      else filteredTierFeed(files, column, query, k, nprobe, store, cosine)
+    val (restrict, tier) = feed match {
+      case Some((phase1, tierUsed)) =>
+        // quantized tiers: the feed's survivors carry exact refined
+        // distances. Filter-free, the k best ARE the result set; under a
+        // FILTER (opt-in, see filteredTierFeed) the whole k·oversample
+        // survivor set grafts and the untouched Filter re-applies its
+        // predicate to the fetched rows — post-filter semantics by
+        // construction (the reference's composition seam,
+        // `src/df_vector/access.rs:65-105`). What the tier
+        // narrows is the candidate set handed to the filter, so a selective
+        // predicate can return fewer than k rows. Exactness gate: exhaustive
+        // nprobe + covering oversample make the feed every candidate row
+        // (vq24/vq25). Either way the feed holds at most k·oversample
+        // (file, ordinal) rows — broadcast-safe.
+        val keys = if (filterFree) phase1.orderBy(col("_dist").asc_nulls_last).limit(k) else phase1
+        (semiJoin(broadcast(keys.select(col("_file").as("__file"), col("_ri").as("__ri")))),
+          tierUsed)
+      case None =>
+        // float: the candidate filter probes each file's index inside the
+        // scan task, so the whole top-k is one job; the re-read scans the
+        // narrow columns and the filter fetches the vectors of candidate
+        // rows only. Cosine queries probe cells by centroid cosine, so the
+        // angular top-k's candidates are the angular neighborhood; the
+        // untouched Filter + Sort above re-rank exactly
+        val probe = CandidateProbe(
+          column, query.toIndexedSeq, nprobe, store.dir, cosine, maxCandidates, files)
+        ((df: DataFrame) => IvfCandidateFilter.over(df, probe), "float")
     }
-    val (candDf, tier, tierReason) = candSide
-    val pruned = graftSubtree(leaf, candDf)
+    val pruned = graftSubtree(leaf, restrict)
     aliasOutput(leaf, pruned).map { p =>
       cacheRewriteIfUnchanged(cacheKey, cacheDirs, idBefore, pruned, tier, tierReason, served)
       (p, tier, tierReason)
@@ -688,27 +645,33 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
       .estimateRangeCandidates(files, column, query, radius, store)
     val maxSelectivity = conf(RangeMaxSelectivityKey, RangeMaxSelectivityDefault).toDouble
     if (totalEst > 0 && est.toDouble / totalEst > maxSelectivity) return None
-    val estBytes = est * IvfCandidateScan.estRowBytes(files)
+    val estBytes = est * graft.ivf.VectorTopK.keyRowBytes(files)
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     val candSide =
       if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(candDf) else candDf
-    val pruned = graftSubtree(leaf, candSide)
+    val pruned = graftSubtree(leaf, semiJoin(candSide))
     aliasOutput(leaf, pruned).map { p =>
       cacheRewriteIfUnchanged(cacheKey, cacheDirs, idBefore, pruned, "float", "range", served)
       p
     }
   }
 
-  /** The pre-alias grafted subtree — `V1 scan semi-join candidate feed`,
-    * re-optimized: everything that depends only on the scanned table +
-    * candidate feed (not this query's attribute ids), and therefore what
-    * the rewritten-plan cache stores; [[aliasOutput]] rebinds per query.
+  /** Restricts the keyed re-read to the `(__file, __ri)` rows of `keys`. */
+  private def semiJoin(keys: DataFrame): DataFrame => DataFrame =
+    _.join(keys, Seq(IvfCandidateFilter.FileCol, IvfCandidateFilter.RowIndexCol), "left_semi")
+
+  /** The pre-alias grafted subtree — the V1 re-read keyed by `(__file,
+    * __ri)`, restricted to candidate rows by `restrict` (the in-task
+    * [[IvfCandidateFilter]] or a semi-join against a key feed), re-optimized:
+    * everything that depends only on the scanned table + candidate
+    * selection (not this query's attribute ids), and therefore what the
+    * rewritten-plan cache stores; [[aliasOutput]] rebinds per query.
     */
   private def graftSubtree(
       leaf: ParquetLeaf,
-      candSide: org.apache.spark.sql.DataFrame): LogicalPlan = {
+      restrict: DataFrame => DataFrame): LogicalPlan = {
     val paths = leaf.rootPaths
-    // the semi-join feed keys on `_metadata.file_path`/`row_index`, which
+    // candidate selection keys on `_metadata.file_path`/`row_index`, which
     // only the V1 file relation exposes — pin the INTERNAL subtree to the
     // V1 source path even when the session routes parquet to DSv2 (the
     // V1-vs-V2 choice is made eagerly inside DataFrameReader.load, so the
@@ -728,20 +691,17 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
         finally spark.conf.set(v1Key, prevV1)
       }
     }
-    val base = scan
-      .withColumn("__file", col("_metadata.file_path"))
-      .withColumn("__ri", col("_metadata.row_index"))
+    val base = IvfCandidateFilter.keyed(scan)
     // narrow to the leaf's (possibly column-pruned, for DSv2) output before
-    // the join so the standalone optimize below can push the pruning into
-    // the scan — the outer plan is not re-optimized after this rule
+    // the restriction so the standalone optimize below can push the pruning
+    // into the scan — the outer plan is not re-optimized after this rule
     val needed = leaf.output.map(_.name)
     val narrowed =
       if (needed.forall(base.columns.contains))
-        base.select(needed.map(col) ++ Seq(col("__file"), col("__ri")): _*)
+        base.select(needed.map(col) ++
+          Seq(col(IvfCandidateFilter.FileCol), col(IvfCandidateFilter.RowIndexCol)): _*)
       else base
-    val pruned = narrowed
-      .join(candSide, Seq("__file", "__ri"), "left_semi")
-      .drop("__file", "__ri")
+    val pruned = restrict(narrowed).drop(IvfCandidateFilter.FileCol, IvfCandidateFilter.RowIndexCol)
     // This rule runs in extraOptimizations, AFTER the main optimizer
     // batches — optimize the injected subtree explicitly so hint
     // elimination, pushdown, and pruning still apply inside it. (Our own
@@ -771,8 +731,8 @@ object VectorTopKRule {
   val MaxCandidatesKey = "spark.graft.ivf.maxCandidates"
   val IndexDirKey = "spark.graft.ivf.indexDir"
 
-  /** Coarse-ranking tier for the winner-first feed: `float` (default) ranks
-    * candidates on selective float reads; `sq8` / `pq` / `pqr` rank on the
+  /** Coarse-ranking tier: `float` (default) ranks every candidate row of
+    * the in-task [[IvfCandidateFilter]]; `sq8` / `pq` / `pqr` rank on the
     * code sidecars (int8 scalar / product / residual-product quantization)
     * and exact-refine `k·oversample` survivors — same SQL, byte-
     * proportional coarse IO. `auto` resolves per query from the measured
@@ -812,12 +772,6 @@ object VectorTopKRule {
     * result is exact (the vq24/vq25 gate).
     */
   val FilteredTierKey = "spark.graft.ivf.filteredTier"
-
-  /** Filter-free queries use the winner-first two-phase feed (rank on
-    * selective reads, fetch k payload rows); set false to force the
-    * one-phase candidate semi-join everywhere.
-    */
-  val TwoPhaseKey = "spark.graft.ivf.twoPhase"
 
   /** Range-predicate rewrite master switch (lossless, so there is no
     * exactness knob — this exists only to isolate plans when debugging).

@@ -109,11 +109,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
            |ORDER BY array_distance(vec, array(${Seq.fill(4)("0.5F").mkString(",")}))
            |LIMIT 5""".stripMargin
       val df = spark.sql(sql)
-      // the rewrite fired — filter-free SQL gets the winner-first feed
-      // (phase-1 `_dist` ranking under a LeftSemi) — and the
-      // ANN-exhaustive answer equals brute force
+      // the rewrite fired — the in-task candidate filter, with no join
+      // against a candidate feed — and the ANN-exhaustive answer equals
+      // brute force
       val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("LeftSemi") && optimized.contains("_dist"), optimized)
+      assert(optimized.contains("IvfCandidateFilter") && !optimized.contains("LeftSemi"),
+        optimized)
       val got = df.collect().map(_.getLong(0)).toSet
       spark.conf.set(plans.VectorTopKRule.EnabledKey, "false")
       val brute = spark.sql(sql).collect().map(_.getLong(0)).toSet

@@ -33,17 +33,17 @@ class IvfPropertySpec extends SparkSpec {
     lists.map(_.distinct.sorted.toArray).toArray)
 
   test("round-robin cap: the (pos, fileIdx) sorted prefix equals the quota water-fill") {
-    // the lazy in-plan cap (VectorTopK.cappedWinnersByFiles sorts candidates
-    // by probe-order position then file index and takes the cap-prefix) must
-    // select exactly the per-file counts the reference-shaped water-fill
-    // (IvfCandidateScan.roundRobinQuotas) hands out — for ANY counts and cap
+    // round-robin selection across files in probe order IS the cap-prefix
+    // of candidates sorted by (probe-order position, file index): the
+    // counts-only water-fill (IvfCandidateFilter.roundRobinQuotas) must hand
+    // out exactly that prefix's per-file counts — for ANY counts and cap
     val countsAndCap = for {
       n <- Gen.choose(1, 12)
       counts <- Gen.listOfN(n, Gen.choose(0L, 50L))
       cap <- Gen.choose(0L, 200L)
     } yield (counts.toArray, cap)
     forAllSeeded(countsAndCap, 200) { case (counts, cap) =>
-      val quotas = graft.plans.IvfCandidateScan.roundRobinQuotas(counts, cap)
+      val quotas = graft.plans.IvfCandidateFilter.roundRobinQuotas(counts, cap)
       // simulate the sorted-prefix selection
       val tagged = for {
         fi <- counts.indices

@@ -60,6 +60,64 @@ class SelectiveFetchSpec extends SparkSpec {
     assert(got(1)._2.toSeq == Seq(4.5f, 5.5f))
   }
 
+  test("decodes only candidate rows: empty, ragged, null and long neighbours") {
+    val dir = Files.createTempDirectory("graft-selfetch-ragged").toString
+    val long = Seq.tabulate(40)(i => Some(i.toFloat))
+    val rows: Seq[(Long, Option[Seq[Option[Float]]])] = Seq(
+      (0L, Some(Seq(Some(1f), Some(2f)))),
+      (1L, Some(Seq())), // empty list
+      (2L, Some(Seq(Some(3f), Some(4f), Some(5f)))), // another length
+      (3L, None),
+      (4L, Some(Seq(Some(6f), None))),
+      (5L, Some(long)), // longer than the decode buffer starts
+      (6L, Some(Seq(Some(7f), Some(8f)))))
+    rows.toDF("id", "vec").coalesce(1).write.mode("overwrite").parquet(dir)
+    val file = oneFile(dir)
+    def fetch(ords: Int*) =
+      SelectiveFetch.embeddings(file, "vec", ords.toArray).map { case (ri, v) => ri -> v.toSeq }
+    // skipped neighbours of every shape leave the value stream in step
+    assert(fetch(2, 6) == Seq(2L -> Seq(3f, 4f, 5f), 6L -> Seq(7f, 8f)))
+    assert(fetch(5) == Seq(5L -> long.map(_.get)))
+    // empty lists, null vectors and null elements yield no row
+    assert(fetch(0 until 7: _*).map(_._1) == Seq(0L, 2L, 5L, 6L))
+    assert(fetch(1, 3, 4).isEmpty)
+  }
+
+  test("decodes every page layout: v1/v2 pages, plain/dictionary, each codec, with and " +
+      "without the offset index") {
+    val rnd = new scala.util.Random(7)
+    // repeated small values keep dictionaries; random ones overflow them
+    val rows: Seq[(Long, Option[Seq[Option[Float]]])] = (0 until 3000).map { i =>
+      val vec =
+        if (i % 97 == 0) None
+        else if (i % 89 == 0) Some(Seq())
+        else if (i % 83 == 0) Some(Seq(Some(1f), None))
+        else Some(Seq.fill(1 + i % 37)(Some(if (i < 1500) (i % 7).toFloat else rnd.nextFloat())))
+      (i.toLong, vec)
+    }
+    val valid = rows.collect { case (id, Some(v)) if v.nonEmpty && v.forall(_.isDefined) =>
+      id -> v.map(_.get) }.toMap
+    val wanted = (0 until 3000).filter(_ => rnd.nextInt(5) == 0).toArray
+    val expected = wanted.toSeq.flatMap(i => valid.get(i.toLong).map(i.toLong -> _))
+    for (v2 <- Seq(false, true); dictionary <- Seq(true, false);
+         codec <- Seq("snappy", "uncompressed", "zstd", "gzip")) {
+      val dir = Files.createTempDirectory("graft-selfetch-layout").toString
+      rows.toDF("id", "vec").coalesce(1).write.mode("overwrite")
+        .option("compression", codec)
+        .option("parquet.writer.version", if (v2) "PARQUET_2_0" else "PARQUET_1_0")
+        .option("parquet.enable.dictionary", dictionary.toString)
+        .option("parquet.page.size", "2048")
+        .option("parquet.block.size", "16384")
+        .parquet(dir)
+      val file = oneFile(dir)
+      for (pageIndex <- Seq(true, false)) {
+        val got = SelectiveFetch.embeddings(file, "vec", wanted, pageIndex)
+          .map { case (ri, v) => ri -> v.toSeq }
+        assert(got == expected, s"v2=$v2 dictionary=$dictionary codec=$codec pageIndex=$pageIndex")
+      }
+    }
+  }
+
   test("page-granular selection over 1-row-page files (rewriteWithIndex layout)") {
     val in = Files.createTempDirectory("graft-pg-in").toString
     val outDir = Files.createTempDirectory("graft-pg-out").toString

@@ -178,10 +178,26 @@ class VectorTopKSpec extends SparkSpec {
     // embeddings_fetched = 3 post-filter rows
     assert(metered.get.metrics("embeddingsFetched").value == 3L)
     assert(metered.get.metrics("batchesFetched").value >= 1L)
-    val candScan = nodes.collectFirst { case c: graft.plans.IvfCandidateScanExec => c }
-    assert(candScan.isDefined, df.queryExecution.executedPlan.toString)
-    assert(candScan.get.metrics("candidateRows").value == 6L)
-    assert(candScan.get.metrics("filesScanned").value == 1L)
+    val candFilter = nodes.collectFirst { case c: graft.plans.IvfCandidateFilterExec => c }
+    assert(candFilter.isDefined, df.queryExecution.executedPlan.toString)
+    assert(candFilter.get.metrics("candidateRows").value == 6L)
+    assert(candFilter.get.metrics("filesScanned").value == 1L)
+  }
+
+  test("listFiles runs no Spark job, and search runs exactly one") {
+    val path = writeFixture(Seq(Seq(0f, 0f), Seq(1f, 0f), Seq(0f, 2f), Seq(5f, 5f)))
+    val store = tmpStore
+    IvfBuilder.build(spark, path, IvfBuilder.Config("vec", nClusters = Some(2)), store)
+    val sc = spark.sparkContext
+    val (files, listJobs) = org.apache.spark.graft.JobCount.of(sc)(IndexManager.listFiles(spark, path))
+    assert(listJobs == 0)
+    assert(files == spark.read.parquet(path).inputFiles.toSeq.map(IndexStore.canonicalPath).sorted)
+    val (res, searchJobs) = org.apache.spark.graft.JobCount.of(sc) {
+      VectorTopK.search(spark, path, "vec", Seq(0f, 0f), 2,
+        VectorTopK.Options(nprobe = 2), store = store).collect()
+    }
+    assert(searchJobs == 1)
+    assert(res.map(_.row_idx).toSeq == Seq(0L, 1L))
   }
 
   test("incremental extend indexes only new files with the shared centroids") {
@@ -416,9 +432,10 @@ class VectorTopKSpec extends SparkSpec {
   }
 
   test("autoBroadcastJoinThreshold=-1 disables the candidate broadcast") {
-    // the filtered (one-phase) path joins the UNBOUNDED candidate feed, so
-    // it must honor the user's broadcast opt-out; the no-filter two-phase
-    // path only ever broadcasts the k winners (bounded), tested below
+    // the filtered path selects candidates in-task, so it has no candidate
+    // join to broadcast at all — and must not force one when the user opted
+    // out; the no-filter two-phase path only ever broadcasts the k winners
+    // (bounded), tested below
     val vecs = Seq(Seq(0f, 0f), Seq(1f, 0f), Seq(0f, 2f), Seq(5f, 5f))
     val path = writeFixture(vecs)
     val store = tmpStore
@@ -431,7 +448,7 @@ class VectorTopKSpec extends SparkSpec {
         VectorTopK.Options(nprobe = 64),
         filter = Some(org.apache.spark.sql.functions.col("id") >= 0), store = store)
       val ids = df.select("id").collect().map(_.getInt(0)).toSet
-      assert(ids == Set(0, 1)) // still correct via the shuffle join
+      assert(ids == Set(0, 1))
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"),
         s"user disabled auto-broadcast; plan must not force one:\n$plan")

@@ -50,8 +50,13 @@ class PlanCacheSpec extends SparkSpec {
   private def register(): Unit =
     spark.read.parquet(dataDir).createOrReplaceTempView("plancache_vecs")
 
-  private def fired(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.toString.contains("LeftSemi")
+  /** The top-k rewrite grafts the candidate filter, the range rewrite a
+    * semi-join.
+    */
+  private def fired(df: DataFrame): Boolean = {
+    val p = df.queryExecution.optimizedPlan.toString
+    p.contains("IvfCandidateFilter") || p.contains("LeftSemi")
+  }
 
   private def ids(df: DataFrame): Seq[Long] = df.collect().map(_.getLong(0)).toSeq
 

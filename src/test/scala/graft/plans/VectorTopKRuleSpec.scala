@@ -52,19 +52,29 @@ class VectorTopKRuleSpec extends SparkSpec {
   private def register(): Unit =
     spark.read.parquet(dataDir).createOrReplaceTempView("graft_vecs")
 
-  private def fired(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.toString.contains("LeftSemi")
+  /** The top-k rewrite grafts the candidate filter, the range rewrite a
+    * semi-join.
+    */
+  private def fired(df: DataFrame): Boolean = {
+    val p = df.queryExecution.optimizedPlan.toString
+    p.contains("IvfCandidateFilter") || p.contains("LeftSemi")
+  }
+
+  /** The float top-k shape: candidates selected in-task, no join. */
+  private def inTask(df: DataFrame): Unit = {
+    val optimized = df.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("IvfCandidateFilter"), optimized)
+    assert(!optimized.contains("LeftSemi"), optimized)
+    assert(df.queryExecution.executedPlan.toString.contains("IvfCandidateFilterExec"))
+  }
 
   test("rewrite fires on ORDER BY array_distance ASC LIMIT k and stays exact") {
     register()
     withRule(nprobe = 8) { // nprobe = nClusters → exhaustive → exact
       val df = sqlTopk()
       assert(fired(df), df.queryExecution.optimizedPlan.toString)
-      // filter-free → winner-first feed: the build side is the phase-1
-      // top-k over selective reads, not the full candidate scan
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("_dist"), optimized)
-      assert(!optimized.contains("IvfCandidateScan"), optimized)
+      // the probe runs inside the scan task: no candidate feed, no join
+      inTask(df)
       spark.conf.set(VectorTopKRule.EnabledKey, "false")
       val brute = sqlTopk()
       assert(!fired(brute))
@@ -73,33 +83,13 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
-  test("twoPhase=false forces the one-phase candidate feed and stays exact") {
-    register()
-    withRule(nprobe = 8) {
-      spark.conf.set(VectorTopKRule.TwoPhaseKey, "false")
-      try {
-        val df = sqlTopk()
-        assert(fired(df), df.queryExecution.optimizedPlan.toString)
-        // candidate feed is the metered custom node, planned by GraftStrategy
-        assert(df.queryExecution.optimizedPlan.toString.contains("IvfCandidateScan"))
-        assert(df.queryExecution.executedPlan.toString.contains("IvfCandidateScanExec"))
-        spark.conf.set(VectorTopKRule.EnabledKey, "false")
-        val brute = sqlTopk()
-        spark.conf.set(VectorTopKRule.EnabledKey, "true")
-        assert(df.collect().map(_.getLong(0)).toSeq ==
-          brute.collect().map(_.getLong(0)).toSeq)
-      } finally spark.conf.unset(VectorTopKRule.TwoPhaseKey)
-    }
-  }
-
   test("residual WHERE keeps the one-phase candidate feed (post-filter)") {
     register()
     withRule(nprobe = 8) {
       val df = sqlTopk(extra = "WHERE label >= 2")
       assert(fired(df))
-      // a filter below the top-k must see full candidate rows — the
-      // winner-first shortcut must NOT engage
-      assert(df.queryExecution.optimizedPlan.toString.contains("IvfCandidateScan"))
+      // a filter below the top-k sees full candidate rows, selected in-task
+      inTask(df)
     }
   }
 
@@ -128,33 +118,30 @@ class VectorTopKRuleSpec extends SparkSpec {
     }
   }
 
-  test("maxCandidates conf caps the fetched candidate set, winner-first") {
+  test("maxCandidates conf caps the fetched candidate set in-task") {
     register()
     withRule(nprobe = 8) {
       spark.conf.set(VectorTopKRule.MaxCandidatesKey, "2")
       try {
         val df = sqlTopk()
         assert(fired(df))
-        // the cap no longer forces one-phase: filter-free keeps the
-        // winner-first feed, with round-robin capping inside the plan
-        val optimized = df.queryExecution.optimizedPlan.toString
-        assert(!optimized.contains("IvfCandidateScan"), optimized)
-        assert(optimized.contains("_pos"), optimized)
+        // the cap rides on the candidate filter itself
+        inTask(df)
+        assert(df.queryExecution.optimizedPlan.toString.contains("maxCandidates=2"))
         // 200 rows, exhaustive probe, but only 2 candidates survive the cap
         assert(df.collect().length == 2)
 
-        // semantic twin: the one-phase path (twoPhase=false) must select
-        // the SAME round-robin-capped candidate set
-        spark.conf.set(VectorTopKRule.TwoPhaseKey, "false")
-        val onePhase = sqlTopk()
-        assert(onePhase.queryExecution.optimizedPlan.toString
-          .contains("IvfCandidateScan"))
-        assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
-          onePhase.collect().map(_.getLong(0)).sorted.toSeq)
-      } finally {
-        spark.conf.unset(VectorTopKRule.MaxCandidatesKey)
-        spark.conf.unset(VectorTopKRule.TwoPhaseKey)
-      }
+        // the cap keeps the first probed cells' rows: a single file's
+        // probe-order prefix of 2 candidates
+        val store = new IndexStore(storeDir)
+        val file = graft.ivf.IndexManager.listFiles(spark, dataDir).head
+        val prefix = graft.ivf.IndexManager.loadIndex(store, file, "vec")
+          .candidateRows(Array.fill(8)(0.5f), 8).take(2).map(_.toLong).toSet
+        val idsByRow = spark.read.parquet(dataDir)
+          .select(col("_metadata.row_index"), col("id")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(df.collect().map(_.getLong(0)).toSet == prefix.map(idsByRow))
+      } finally spark.conf.unset(VectorTopKRule.MaxCandidatesKey)
     }
   }
 
@@ -165,7 +152,7 @@ class VectorTopKRuleSpec extends SparkSpec {
       try {
         val df = sqlTopk(extra = "WHERE label >= 0")
         assert(fired(df))
-        assert(df.queryExecution.optimizedPlan.toString.contains("IvfCandidateScan"))
+        inTask(df)
         assert(df.collect().length == 4)
       } finally spark.conf.unset(VectorTopKRule.MaxCandidatesKey)
     }
@@ -177,14 +164,13 @@ class VectorTopKRuleSpec extends SparkSpec {
          |ORDER BY array_cosine_similarity(vec, array(${Seq.fill(8)("0.5F").mkString(",")})) $order
          |LIMIT 5""".stripMargin)
 
-  test("cosine DESC rewrites via the angular winner-first feed and stays exact") {
+  test("cosine DESC rewrites via the angular candidate filter, exact") {
     register()
     withRule(nprobe = 8) { // exhaustive → exact regardless of probe order
       val df = sqlCosineTopk()
       assert(fired(df), df.queryExecution.optimizedPlan.toString)
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("_dist"), optimized)
-      assert(!optimized.contains("IvfCandidateScan"), optimized)
+      inTask(df)
+      assert(df.queryExecution.optimizedPlan.toString.contains("metric=cosine"))
       spark.conf.set(VectorTopKRule.EnabledKey, "false")
       val brute = sqlCosineTopk()
       assert(!fired(brute))
@@ -205,9 +191,9 @@ class VectorTopKRuleSpec extends SparkSpec {
     withRule(nprobe = 8) { // exhaustive → both probe orders emit every row
       val df = sqlCosineTopk(extra = "WHERE label >= 2")
       assert(fired(df), df.queryExecution.optimizedPlan.toString)
-      // post-filter semantics need the full candidate feed, probed angularly
+      // post-filter semantics see every candidate row, probed angularly
+      inTask(df)
       val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("IvfCandidateScan"), optimized)
       assert(optimized.contains("metric=cosine"), optimized)
       spark.conf.set(VectorTopKRule.EnabledKey, "false")
       val brute = sqlCosineTopk(extra = "WHERE label >= 2")
@@ -215,20 +201,6 @@ class VectorTopKRuleSpec extends SparkSpec {
       spark.conf.set(VectorTopKRule.EnabledKey, "true")
       assert(df.collect().map(_.getLong(0)).toSeq ==
         brute.collect().map(_.getLong(0)).toSeq)
-
-      // twoPhase=false: filter-free cosine also drops to the angular
-      // one-phase feed instead of bailing
-      spark.conf.set(VectorTopKRule.TwoPhaseKey, "false")
-      try {
-        val one = sqlCosineTopk()
-        assert(fired(one), one.queryExecution.optimizedPlan.toString)
-        assert(one.queryExecution.optimizedPlan.toString.contains("metric=cosine"))
-        spark.conf.set(VectorTopKRule.EnabledKey, "false")
-        val b2 = sqlCosineTopk()
-        spark.conf.set(VectorTopKRule.EnabledKey, "true")
-        assert(one.collect().map(_.getLong(0)).toSeq ==
-          b2.collect().map(_.getLong(0)).toSeq)
-      } finally spark.conf.unset(VectorTopKRule.TwoPhaseKey)
     }
   }
 
