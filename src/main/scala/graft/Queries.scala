@@ -307,24 +307,22 @@ object Queries {
        |  ORDER BY list_cosine_similarity(embedding::FLOAT[], $duckVecLit) DESC LIMIT 10)
        |ORDER BY vec_id""".stripMargin
 
-  /** Programmatic twin of vq8: `VectorTopK.indexedCosine` (angular probe +
-    * winner-first payload fetch) at exhaustive probe — exact, so it shares
-    * vq8's DuckDB cosine oracle.
-    */
-  /** Programmatic angular quantized twins ([[VectorTopK
-    * .indexedQuantizedCosine]] / [[VectorTopK.indexedPqCosine]]): the API
-    * forms of the vq20/vq21 SQL tiers, exhaustive probe + covering
-    * oversample ⇒ exact, sharing vq8's oracle.
+  /** Programmatic angular quantized top-k ([[VectorTopK.indexed]] with
+    * `Options(tier = Sq8 | Pq, cosine = true)`): the API forms of the
+    * vq20/vq21 SQL tiers, exhaustive probe + covering oversample ⇒ exact,
+    * sharing vq8's oracle.
     */
   def vq22QuantizedCosineApi(spark: SparkSession, sfDir: String): DataFrame = {
     val path = s"$sfDir/embeddings.parquet"
     val ti = IndexManager.ensure(spark, path, "embedding")
     graft.ivf.Sq8Sidecar.ensure(spark, path, "embedding")
     VectorTopK
-      .indexedQuantizedCosine(
+      .indexed(
         spark, path, "embedding", queryVec, 10,
-        VectorTopK.Options(nprobe = ti.nClusters),
-        oversample = coveringOversample(spark, path, 10))
+        VectorTopK.Options(
+          nprobe = ti.nClusters,
+          tier = VectorTopK.Tier.Sq8(coveringOversample(spark, path, 10)),
+          cosine = true))
       .select(col("vec_id"))
       .orderBy(col("vec_id"))
   }
@@ -334,21 +332,27 @@ object Queries {
     val ti = IndexManager.ensure(spark, path, "embedding")
     graft.ivf.PqSidecar.ensure(spark, path, "embedding", m = 8)
     VectorTopK
-      .indexedPqCosine(
+      .indexed(
         spark, path, "embedding", queryVec, 10,
-        VectorTopK.Options(nprobe = ti.nClusters),
-        oversample = coveringOversample(spark, path, 10))
+        VectorTopK.Options(
+          nprobe = ti.nClusters,
+          tier = VectorTopK.Tier.Pq(coveringOversample(spark, path, 10)),
+          cosine = true))
       .select(col("vec_id"))
       .orderBy(col("vec_id"))
   }
 
+  /** Programmatic twin of vq8: [[VectorTopK.indexed]] under
+    * `Options(cosine = true)` (angular probe + winner-first payload fetch)
+    * at exhaustive probe — exact, so it shares vq8's DuckDB cosine oracle.
+    */
   def vq14CosineApi(spark: SparkSession, sfDir: String): DataFrame = {
     val path = s"$sfDir/embeddings.parquet"
     val ti = IndexManager.ensure(spark, path, "embedding")
     VectorTopK
-      .indexedCosine(
+      .indexed(
         spark, path, "embedding", queryVec, 10,
-        VectorTopK.Options(nprobe = ti.nClusters))
+        VectorTopK.Options(nprobe = ti.nClusters, cosine = true))
       .select(col("vec_id"))
       .orderBy(col("vec_id"))
   }
@@ -638,8 +642,8 @@ object Queries {
     val k = 10
     val oversample = coveringOversample(spark, path, k)
     VectorTopK
-      .indexedQuantized(spark, path, "embedding", queryVec, k,
-        VectorTopK.Options(nprobe = ti.nClusters), oversample = oversample)
+      .indexed(spark, path, "embedding", queryVec, k,
+        VectorTopK.Options(nprobe = ti.nClusters, tier = VectorTopK.Tier.Sq8(oversample)))
       .orderBy(distAsc("embedding"), col("vec_id"))
       .select(col("vec_id"))
   }
@@ -659,8 +663,8 @@ object Queries {
     val k = 10
     val oversample = coveringOversample(spark, path, k)
     VectorTopK
-      .indexedPq(spark, path, "embedding", queryVec, k,
-        VectorTopK.Options(nprobe = ti.nClusters), oversample = oversample)
+      .indexed(spark, path, "embedding", queryVec, k,
+        VectorTopK.Options(nprobe = ti.nClusters, tier = VectorTopK.Tier.Pq(oversample)))
       .orderBy(distAsc("embedding"), col("vec_id"))
       .select(col("vec_id"))
   }
@@ -678,9 +682,9 @@ object Queries {
     val k = 10
     val oversample = coveringOversample(spark, path, k)
     VectorTopK
-      .indexedPq(spark, path, "embedding", queryVec, k,
-        VectorTopK.Options(nprobe = ti.nClusters), oversample = oversample,
-        residual = true)
+      .indexed(spark, path, "embedding", queryVec, k,
+        VectorTopK.Options(
+          nprobe = ti.nClusters, tier = VectorTopK.Tier.Pq(oversample, residual = true)))
       .orderBy(distAsc("embedding"), col("vec_id"))
       .select(col("vec_id"))
   }

@@ -138,7 +138,8 @@ final class IndexStore(val dir: String) extends Serializable {
   /** Per-cell radius sidecar for (data file, column): cell i's value is the
     * max TRUE L2 distance from centroid i to its members — the triangle-
     * inequality bound behind exact index-pruned RANGE search
-    * ([[graft.ivf.VectorTopK.rangeSearch]]). Tiny (4 bytes/cell) and
+    * ([[graft.ivf.VectorTopK.rangeSearch]] / [[graft.ivf.VectorTopK.rangeRows]]
+    * and the SQL range rewrite). Tiny (4 bytes/cell) and
     * OPTIONAL: readers without it fall back to probing every cell, which is
     * still exact. The bounds are a function of the centroid set, so the
     * header carries the index's [[IvfIndex.centroidDigest]]; a reader that

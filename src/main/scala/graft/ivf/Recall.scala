@@ -87,8 +87,8 @@ object Recall {
     val files = IndexManager.listFiles(spark, path)
     val winners = VectorTopK
       .searchByFiles(
-        spark, files, column, query, VectorTopK.Options(nprobe = nprobe), store,
-        cosine = cosine)
+        spark, files, column, query, VectorTopK.Options(nprobe = nprobe, cosine = cosine),
+        store)
       .orderBy(col("_dist").asc_nulls_last) // cosine feed emits 1 − cos
       .limit(k)
       .select(col("_file"), col("_ri"))

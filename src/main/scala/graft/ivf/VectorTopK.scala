@@ -9,18 +9,22 @@ import graft.functions.{array_distance, float_vector}
   *
   * Mirrors the reference's `TopkBuilder` / `VectorTopKExec` pipeline
   * (`/root/reference/src/ivf/search.rs:47-142`, `src/df_vector/exec.rs`)
-  * as a Spark plan:
+  * as a Spark plan, with one entry point per result shape — [[search]]
+  * (`SearchResult` rows) and [[indexed]] (payload rows) — and the metric
+  * and coarse-ranking tier chosen in [[Options]], like the reference's one
+  * options struct (`src/df_vector/options.rs:3-19`):
   *
   *  - brute force = `orderBy(array_distance).limit(k)` — Spark plans this as
   *    `TakeOrderedAndProjectExec`, a per-partition bounded heap + driver
   *    merge, i.e. exactly the reference's heap re-rank, but distributed;
   *  - indexed, no residual filter = TWO-PHASE (the reference's access
-  *    plan): phase 1 probes per-file indexes executor-side and reads only
-  *    the embedding column of candidate row groups (`SelectiveFetch`) to
-  *    rank candidates; phase 2 materializes the k winners eagerly (the
-  *    reference TopkBuilder's shape) and fetches their payload rows from
-  *    ONLY the files that hold them — payload IO is ≤ k files of the
-  *    projected columns, not a table scan;
+  *    plan): phase 1 probes per-file indexes executor-side and ranks
+  *    candidates — on their floats read by `SelectiveFetch` (the `Float`
+  *    tier), or on SQ8/PQ code sidecars with an exact float refine of the
+  *    `k·oversample` survivors ([[quantizedWinners]]); phase 2 materializes
+  *    the k winners eagerly (the reference TopkBuilder's shape) and fetches
+  *    their payload rows from ONLY the files that hold them — payload IO is
+  *    ≤ k files of the projected columns, not a table scan;
   *  - indexed with a residual filter = one pass: the scan re-read under
   *    [[graft.plans.IvfCandidateFilter]], which probes each file's index
   *    inside the scan task (the reference's per-scan-file
@@ -40,26 +44,77 @@ import graft.functions.{array_distance, float_vector}
   */
 object VectorTopK {
 
-  /** Reference defaults: `/root/reference/src/df_vector/options.rs:3-19`. */
-  final case class Options(nprobe: Int = 5, maxCandidates: Option[Int] = None) {
+  /** Coarse-ranking tier: what phase 1 reads to rank candidates. */
+  sealed trait Tier
+  object Tier {
+    /** Full-precision floats, read selectively (exact at exhaustive nprobe). */
+    case object Float extends Tier
+
+    /** int8 scalar-quantized codes ([[Sq8Sidecar]], `dim` bytes per
+      * candidate); the `k·oversample` best by code distance are refined on
+      * their floats.
+      */
+    final case class Sq8(oversample: Int = 4) extends Tier {
+      require(oversample >= 1, "oversample must be >= 1")
+    }
+
+    /** Product-quantized codes ([[PqSidecar]], `m` bytes per candidate)
+      * ranked by ADC; `residual` reads the IVF-ADC variant whose codes
+      * quantize `vec − cellCentroid`. The `k·oversample` best are refined
+      * on their floats.
+      */
+    final case class Pq(oversample: Int = 8, residual: Boolean = false) extends Tier {
+      require(oversample >= 1, "oversample must be >= 1")
+    }
+  }
+
+  /** Reference defaults (the reference's `src/df_vector/options.rs:3-19`),
+    * plus what the reference picks by method: `tier` (coarse ranking) and
+    * `cosine` (angular metric — cells probed by centroid cosine, results
+    * ordered most-similar first, `distance` = 1 − cos).
+    *
+    * Exact when `nprobe >= nClusters` and, for a quantized tier,
+    * `k·oversample` covers the candidate volume (every candidate survives
+    * coarse ranking and the refine is exact float space); otherwise
+    * approximate with recall governed by (nprobe, oversample). Angular
+    * recall below exhaustive nprobe is best over indexes built on
+    * unit-normalized embeddings, where angular and L2 cells coincide.
+    */
+  final case class Options(
+      nprobe: Int = 5,
+      maxCandidates: Option[Int] = None,
+      tier: Tier = Tier.Float,
+      cosine: Boolean = false) {
     require(nprobe > 0, "nprobe must be > 0")
     maxCandidates.foreach(m => require(m > 0, "max_candidates must be > 0"))
+    // the quantized tiers already bound refine IO by k·oversample
+    require(
+      maxCandidates.isEmpty || tier == Tier.Float,
+      s"max_candidates (the fairness cap) applies to the Float tier only, got $tier")
   }
 
   /** Programmatic search row, the reference's `SearchResult`
     * (`/root/reference/src/ivf/search.rs:40-45`): file-local row ordinal +
-    * true (sqrt'd) L2 distance.
+    * true (sqrt'd) L2 distance, or 1 − cos under `Options.cosine`.
     */
   final case class SearchResult(row_idx: Long, distance: Float)
 
   def distanceCol(column: String, query: Seq[Float]): Column =
     array_distance(col(column), float_vector(query))
 
+  /** Best-first ordering in the query's metric: distance ascending, or
+    * cosine similarity descending; nulls last either way.
+    */
+  private def rankOrder(column: String, query: Seq[Float], cosine: Boolean): Column =
+    if (cosine)
+      graft.functions.array_cosine_similarity(col(column), float_vector(query)).desc_nulls_last
+    else distanceCol(column, query).asc_nulls_last
+
   /** Exact brute-force top-k; `NULLS LAST` reproduces the reference's
     * skip-null/skip-mismatched-dim semantics under `LIMIT k`.
     */
   def bruteForce(df: DataFrame, column: String, query: Seq[Float], k: Int): DataFrame =
-    df.orderBy(distanceCol(column, query).asc_nulls_last).limit(k)
+    df.orderBy(rankOrder(column, query, cosine = false)).limit(k)
 
   /** Round-robin fairness cap across files so one file cannot starve the
     * others (reference `CandidateCursor`: `src/df_vector/access.rs:193-243`).
@@ -90,6 +145,36 @@ object VectorTopK {
     perFile.zipWithIndex.map { case ((file, _), i) => (file, out(i).result().toArray) }
   }
 
+  private def listed(spark: SparkSession, path: String): Seq[String] = {
+    val files = IndexManager.listFiles(spark, path)
+    require(files.nonEmpty, s"no parquet files under $path")
+    files
+  }
+
+  /** Driver-side validation, header-peek only (O(files) tiny reads): every
+    * file has an index of the query's dim, and passes the tier's `sidecar`
+    * check. Memoized on the table's dir identity, so repeat calls over an
+    * unchanged table validate in O(1) stats
+    * ([[IndexStore.memoizedTableProbe]]); a throwing validation is never
+    * cached, so error paths re-check every time.
+    */
+  private def validateIndexed(
+      files: Seq[String],
+      column: String,
+      dim: Int,
+      store: IndexStore,
+      tag: String = "float",
+      sidecar: String => Unit = _ => ()): Unit =
+    IndexStore.memoizedTableProbe(s"validate-$tag-$dim", column, files, store.dir) {
+      files.foreach { file =>
+        val (indexDim, _) = IndexManager.cachedPeekStrict(store, file, column)
+          .getOrElse(throw new IllegalStateException(
+            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
+        require(indexDim == dim, s"query dim $dim != index dim $indexDim for $file")
+        sidecar(file)
+      }
+    }
+
   /** The table re-read restricted to IVF candidate rows by the in-task
     * [[graft.plans.IvfCandidateFilter]] — the plan-integrated fetch behind
     * the filtered [[indexed]].
@@ -101,34 +186,19 @@ object VectorTopK {
       query: Seq[Float],
       options: Options,
       store: IndexStore): DataFrame = {
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
-    val q = query.toArray
-
-    // driver-side validation is header-peek only (O(files) tiny reads);
-    // posting lists are probed executor-side by the candidate filter
-    IndexStore.memoizedTableProbe(
-      s"validate-float-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(
-          dim == q.length,
-          s"query dim ${q.length} != index dim $dim for $file")
-      }
-    }
+    val files = listed(spark, path)
+    validateIndexed(files, column, query.length, store)
     graft.Graft.installStrategy(spark)
     import graft.plans.IvfCandidateFilter
     IvfCandidateFilter
       .over(IvfCandidateFilter.keyed(spark.read.parquet(path)), graft.plans.CandidateProbe(
-        column, query, options.nprobe, store.dir, cosine = false,
+        column, query, options.nprobe, store.dir, options.cosine,
         options.maxCandidates, files))
       .drop(IvfCandidateFilter.FileCol, IvfCandidateFilter.RowIndexCol)
   }
 
   /** Estimated bytes per (path, ordinal) key row, for broadcast sizing. */
-  private[graft] def keyRowBytes(files: Seq[String]): Long =
+  private def keyRowBytes(files: Seq[String]): Long =
     files.headOption.map(_.length.toLong).getOrElse(64L) + 32L
 
   /** Wrap in the fetch-metering node (`embeddings_fetched` /
@@ -189,7 +259,7 @@ object VectorTopK {
       query: Seq[Float],
       k: Int,
       winnerFeed: DataFrame,
-      cosine: Boolean = false): DataFrame = {
+      cosine: Boolean): DataFrame = {
     val winners = winnerFeed
       .orderBy(col("_dist").asc_nulls_last)
       .limit(k)
@@ -201,30 +271,27 @@ object VectorTopK {
     // ordered by L2 would hand callers the wrong head row on
     // non-unit-norm data (the SQL path never hits this — its own Sort
     // stays above the rewritten leaf)
-    val ordering =
-      if (cosine)
-        graft.functions
-          .array_cosine_similarity(col(column), graft.functions.float_vector(query))
-          .desc_nulls_last
-      else distanceCol(column, query).asc_nulls_last
-    meterFetch(spark, fetched).orderBy(ordering).limit(k)
+    meterFetch(spark, fetched).orderBy(rankOrder(column, query, cosine)).limit(k)
   }
 
-  /** Index-accelerated top-k over a Parquet table.
+  /** Index-accelerated top-k over a Parquet table: full payload rows,
+    * best first in the query's metric (`Options.cosine`).
     *
     * Filter-free queries run phase 1 EAGERLY (the reference TopkBuilder's
-    * shape): the k winners are materialized at call time so the payload
-    * scan can be pruned to only their files — see [[fetchWinnersPayload]].
+    * shape) on the winner feed of `Options.tier`: the k winners are
+    * materialized at call time so the payload scan can be pruned to only
+    * their files — see [[fetchWinnersPayload]].
     * Consequence: the returned DataFrame is a SNAPSHOT of the winners at
     * construction time — re-executing it after the table grows replays the
     * frozen winner set (construct a fresh query to re-probe), and
     * construction itself launches the phase-1 jobs. The filtered variant
-    * stays fully lazy (its candidate feed re-probes per execution) —
-    * callers needing lazy filter-free plans can use the SQL rewrite path,
-    * which keeps the lazy semi-join shape.
+    * stays fully lazy (its candidate filter re-probes per execution), and
+    * so does the SQL rewrite (`ORDER BY array_distance(…) LIMIT k`), whose
+    * in-task candidate filter probes on every execution.
     *
     * @param filter residual predicate applied AFTER candidate pruning
-    *               (post-filter semantics, like the reference).
+    *               (post-filter semantics, like the reference); served on
+    *               the `Float` tier only.
     */
   def indexed(
       spark: SparkSession,
@@ -238,18 +305,23 @@ object VectorTopK {
     require(k > 0, "k must be > 0")
     filter match {
       case Some(residual) =>
+        require(
+          options.tier == Tier.Float,
+          s"a residual filter runs on the Float tier only, got ${options.tier}")
         // post-filter semantics: the residual prunes candidates BEFORE the
         // top-k, so full candidate rows must be fetched — one-phase plan
         val scan = candidateScan(spark, path, column, query, options, store)
-        bruteForce(meterFetch(spark, scan.where(residual)), column, query, k)
+        meterFetch(spark, scan.where(residual))
+          .orderBy(rankOrder(column, query, options.cosine)).limit(k)
       case None =>
         // two-phase (the reference's access plan): phase 1 ranks candidates
-        // reading ONLY the embedding column of candidate row groups
-        // (SelectiveFetch — IO proportional to candidates); phase 2 fetches
-        // full payload rows for just the k winners from ONLY their files.
+        // reading ONLY the embedding column (or codes) of candidate rows —
+        // IO proportional to candidates; phase 2 fetches full payload rows
+        // for just the k winners from ONLY their files.
         winnersThenFetch(
           spark, path, column, query, k,
-          searchByFile(spark, path, column, query, options, store))
+          winnerFeed(spark, listed(spark, path), column, query, k, options, store),
+          options.cosine)
     }
   }
 
@@ -257,14 +329,18 @@ object VectorTopK {
     * (file-local row ordinal, true L2 distance), distance ascending
     * (`/root/reference/src/ivf/search.rs:129-141`; the reference sqrt's the
     * squared-L2 heap key before returning, as `array_distance` does).
+    * Under `Options.cosine`, `distance` is `1 − cos(vec, query)`, still
+    * ascending (most similar first) — the API twin of the SQL path's
+    * `ORDER BY array_cosine_similarity(col, lit) DESC LIMIT k`.
     *
     * This is the reference's Rust-API pipeline end to end, distributed:
     * each executor task probes its files' indexes and SELECTIVELY reads
-    * only the embedding column of only the row groups holding candidates
-    * ([[SelectiveFetch]]) — IO proportional to candidates, not file size —
-    * then `orderBy(distance).limit(k)` bounded-heap merges across files.
-    * For multi-file tables `row_idx` is file-local, like the reference's
-    * per-file API; use [[indexed]] when full rows are needed.
+    * only the embedding column (or, on a quantized tier, the codes) of only
+    * the candidate rows ([[SelectiveFetch]]) — IO proportional to
+    * candidates, not file size — then `orderBy(distance).limit(k)`
+    * bounded-heap merges across files. For multi-file tables `row_idx` is
+    * file-local, like the reference's per-file API; use [[indexed]] when
+    * full rows are needed.
     */
   def search(
       spark: SparkSession,
@@ -276,87 +352,40 @@ object VectorTopK {
       store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
     require(k > 0, "k must be > 0")
     import spark.implicits._
-    searchByFile(spark, path, column, query, options, store)
+    winnerFeed(spark, listed(spark, path), column, query, k, options, store)
       .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
       .orderBy(col("distance").asc_nulls_last)
       .limit(k)
       .as[SearchResult]
   }
 
-  /** Programmatic ANGULAR search — the API twin of the SQL path's
-    * `ORDER BY array_cosine_similarity(col, lit) DESC LIMIT k` rewrite:
-    * cells probed by centroid cosine, candidates selectively read, and
-    * `distance` is `1 − cos(vec, query)` ascending (most similar first),
-    * so the [[SearchResult]] shape carries over unchanged. Exact at
-    * `nprobe >= nClusters` on any index; below that, recall is best over
-    * indexes built on unit-normalized embeddings (angular and L2 cell
-    * geometry coincide there).
+  /** Phase 1 of `Options.tier` as a lazy `(_file, _ri, _dist)` feed with
+    * exact distances in the query's metric.
     */
-  def searchCosine(
+  private def winnerFeed(
       spark: SparkSession,
-      path: String,
+      files: Seq[String],
       column: String,
       query: Seq[Float],
       k: Int,
-      options: Options = Options(),
-      store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
-    require(k > 0, "k must be > 0")
-    import spark.implicits._
-    searchByFile(spark, path, column, query, options, store, cosine = true)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
+      options: Options,
+      store: IndexStore): DataFrame =
+    options.tier match {
+      case Tier.Float => searchByFiles(spark, files, column, query, options, store)
+      case _ => quantizedWinners(spark, files, column, query, k, options, store)
+    }
 
-  /** Plan-integrated angular top-k: full payload rows of the k most
-    * cosine-similar vectors, ordered by cosine similarity DESCENDING —
-    * [[indexed]]'s two-phase shape on the angular winner feed.
-    */
-  def indexedCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      store: IndexStore = IndexStore.default): DataFrame = {
-    require(k > 0, "k must be > 0")
-    winnersThenFetch(
-      spark, path, column, query, k,
-      searchByFile(spark, path, column, query, options, store, cosine = true),
-      cosine = true)
-  }
-
-  /** The probe + selective-read pipeline as a lazy DataFrame of
+  /** The float probe + selective-read pipeline as a lazy DataFrame of
     * `(_file, _ri, _dist)`: each executor task probes its files' indexes
     * and reads ONLY the embedding column of only the row groups holding
-    * candidates ([[SelectiveFetch]]) — the shared phase-1 of [[search]]
+    * candidates ([[SelectiveFetch]]) — the `Float` phase 1 of [[search]]
     * and the two-phase [[indexed]].
-    */
-  private def searchByFile(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      options: Options,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame = {
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
-    searchByFiles(spark, files, column, query, options, store, cosine)
-  }
-
-  /** Files-list form of the phase-1 pipeline.
     *
-    * `cosine = true` switches to the angular metric: cells are probed by
+    * `Options.cosine` switches to the angular metric: cells are probed by
     * centroid cosine ([[IvfIndex.findClosestCentroidsCosine]]) and `_dist`
     * is `1 − cos(vec, query)` — ascending-sortable, so the same
     * `orderBy(_dist).limit(k)` winner selection serves both metrics
-    * (descending cosine ≡ ascending 1 − cos). Exact at
-    * `nprobe >= nClusters` like the L2 path; below that, recall is best
-    * over indexes built on unit-normalized vectors, where angular and L2
-    * cell geometry coincide.
+    * (descending cosine ≡ ascending 1 − cos).
     */
   private[graft] def searchByFiles(
       spark: SparkSession,
@@ -364,31 +393,19 @@ object VectorTopK {
       column: String,
       query: Seq[Float],
       options: Options,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame = {
+      store: IndexStore): DataFrame = {
     import spark.implicits._
     require(files.nonEmpty, "no parquet files to search")
     val q = query.toArray
-    // table-level dir-identity memo: repeat calls over an unchanged table
-    // validate in O(1) stats (IndexStore.memoizedTableProbe); a throwing
-    // validation is never cached, so error paths re-check every time
-    IndexStore.memoizedTableProbe(
-      s"validate-float-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
-      }
-    }
+    validateIndexed(files, column, q.length, store)
     val sc = spark.sparkContext
     val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
     val colName = column
     val nprobe = options.nprobe
-    val angular = cosine
+    val angular = options.cosine
     // fairness cap, as in the SQL rewrite's candidate filter
     val quotas = graft.plans.IvfCandidateFilter.quotas(sc, graft.plans.CandidateProbe(
-      column, query, nprobe, store.dir, cosine, options.maxCandidates, files))
+      column, query, nprobe, store.dir, angular, options.maxCandidates, files))
     val withQuota = files.map(f => (f, quotas.fold(Long.MaxValue)(_(f))))
     val results = sc.parallelize(withQuota, slices).flatMap { case (file, quota) =>
       val index = IndexManager.loadIndex(store, file, colName)
@@ -403,15 +420,16 @@ object VectorTopK {
       val n = math.min(quota, cands.length.toLong).toInt
       val capped = java.util.Arrays.copyOfRange(cands, 0, n)
       SelectiveFetch.embeddings(file, colName, capped).iterator.collect {
-        case (ri, vec) if vec.length == q.length =>
-          val d =
-            if (angular) 1.0f - graft.functions.VectorKernels.cosine(vec, q)
-            else math.sqrt(graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat
-          (file, ri, d)
+        case (ri, vec) if vec.length == q.length => (file, ri, exactDist(vec, q, angular))
       }
     }
     spark.createDataset(results).toDF("_file", "_ri", "_dist")
   }
+
+  /** True L2 distance, or `1 − cos` when `angular`. */
+  private def exactDist(vec: Array[Float], q: Array[Float], angular: Boolean): Float =
+    if (angular) 1.0f - graft.functions.VectorKernels.cosine(vec, q)
+    else math.sqrt(graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat
 
   /** Brute `(_file, _ri, _dist)` over the whole table in ONE vectorized
     * scan pass, distances through [[graft.functions.VectorKernels]] — the
@@ -433,9 +451,7 @@ object VectorTopK {
       .as[(String, Long, Array[Float])]
       .flatMap { case (f, ri, vec) =>
         if (vec != null && vec.length == q.length)
-          Iterator.single(
-            (f, ri,
-              math.sqrt(graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat))
+          Iterator.single((f, ri, exactDist(vec, q, angular = false)))
         else Iterator.empty
       }
       .toDF("_file", "_ri", "_dist")
@@ -462,21 +478,9 @@ object VectorTopK {
       store: IndexStore): DataFrame = {
     import spark.implicits._
     require(radius >= 0, s"radius must be >= 0, got $radius")
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
+    val files = listed(spark, path)
     val q = query.toArray
-    // table-level dir-identity memo: repeat calls over an unchanged table
-    // validate in O(1) stats (IndexStore.memoizedTableProbe); a throwing
-    // validation is never cached, so error paths re-check every time
-    IndexStore.memoizedTableProbe(
-      s"validate-float-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
-      }
-    }
+    validateIndexed(files, column, q.length, store)
     val sc = spark.sparkContext
     val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
     val colName = column
@@ -489,9 +493,7 @@ object VectorTopK {
       java.util.Arrays.sort(cands)
       SelectiveFetch.embeddings(file, colName, cands).iterator.flatMap {
         case (ri, vec) if vec.length == q.length =>
-          val d = math
-            .sqrt(graft.functions.VectorKernels.squaredL2(vec, q).toDouble)
-            .toFloat
+          val d = exactDist(vec, q, angular = false)
           if (d < r) Iterator.single((file, ri, d)) else Iterator.empty
         case _ => Iterator.empty
       }
@@ -542,7 +544,7 @@ object VectorTopK {
     * sorted file list averages blob-holding and empty files.
     */
   private val RangeEstimateSampleFiles = 4
-  private[graft] def estimateRangeCandidates(
+  private def estimateRangeCandidates(
       files: Seq[String],
       column: String,
       query: Array[Float],
@@ -571,28 +573,43 @@ object VectorTopK {
     else ((cand * files.size) / seen, (total * files.size) / seen)
   }
 
-  /** Candidate estimate plus the bail decision, computed ONCE per call
-    * (callers need both): `bail` is true when the estimated candidate
-    * fraction exceeds `spark.graft.ivf.rangeMaxSelectivity` (default 0.5,
-    * shared with the SQL rewrite) — a barely-pruning radius makes the
-    * vectorized full scan cheaper than point-read fetch, the classic
-    * index-vs-scan crossover (measured at sf0.1: a ~10%-in-range radius
-    * with cell-wide spread ran 0.31 s pruned vs 0.14 s brute, BENCHNOTES
-    * round-5).
+  /** The range query's sampled candidate estimate and the two plan choices
+    * both range paths (this API and `VectorTopKRule.buildRangePrunedLeaf`)
+    * make from it, computed ONCE per call:
+    *
+    *  - `bail` is true when the estimated candidate fraction exceeds
+    *    `spark.graft.ivf.rangeMaxSelectivity` (default 0.05) — a
+    *    barely-pruning radius makes the vectorized full scan cheaper than
+    *    point-read fetch, the classic index-vs-scan crossover (measured at
+    *    sf0.1: a ~10%-in-range radius with cell-wide spread ran 0.31 s
+    *    pruned vs 0.14 s brute, BENCHNOTES round-5);
+    *  - `broadcastKeys`: even below the bailout a broad radius can make the
+    *    key set too large to broadcast safely, so the keys broadcast only
+    *    when their estimated size is at most half of
+    *    `spark.sql.autoBroadcastJoinThreshold`.
     */
-  private def rangeEstimate(
+  private[graft] final case class RangeEstimate(
+      candidates: Long, bail: Boolean, broadcastKeys: Boolean) {
+    def keySide(keys: DataFrame): DataFrame = if (broadcastKeys) broadcast(keys) else keys
+  }
+
+  private[graft] def rangeEstimate(
       spark: SparkSession,
       files: Seq[String],
       column: String,
       query: Array[Float],
       radius: Float,
-      store: IndexStore): (Long, Boolean) = {
+      store: IndexStore): RangeEstimate = {
     val (est, total) =
       estimateRangeCandidates(files, column, query, radius, store)
     val maxSel = spark.conf
       .getOption(graft.plans.VectorTopKRule.RangeMaxSelectivityKey)
       .getOrElse(graft.plans.VectorTopKRule.RangeMaxSelectivityDefault).toDouble
-    (est, total > 0 && est.toDouble / total > maxSel)
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    RangeEstimate(
+      est,
+      bail = total > 0 && est.toDouble / total > maxSel,
+      broadcastKeys = threshold >= 0 && est * keyRowBytes(files) * 2 <= threshold)
   }
 
   /** Programmatic range search ([[SearchResult]] rows, distance ascending):
@@ -610,11 +627,9 @@ object VectorTopK {
       radius: Float,
       store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
     import spark.implicits._
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
-    val (_, bail) = rangeEstimate(spark, files, column, query.toArray, radius, store)
+    val files = listed(spark, path)
     val winners =
-      if (bail) {
+      if (rangeEstimate(spark, files, column, query.toArray, radius, store).bail) {
         // brute twin through the SAME kernel as the pruned path so both
         // branches agree bit-for-bit at the radius boundary
         bruteDistances(spark, path, column, query)
@@ -634,8 +649,8 @@ object VectorTopK {
     *
     * Selectivity: point-read pruning wins when the radius is SELECTIVE (a
     * small, localized in-range neighborhood). Past
-    * `spark.graft.ivf.rangeMaxSelectivity` (default 0.5, same estimate and
-    * default as the SQL rewrite) this falls back to the vectorized full
+    * `spark.graft.ivf.rangeMaxSelectivity` (default 0.05, same estimate and
+    * default as the SQL rewrite, [[rangeEstimate]]) this falls back to the vectorized full
     * scan with the codegen'd predicate — identical rows, cheaper plan.
     */
   def rangeRows(
@@ -645,144 +660,112 @@ object VectorTopK {
       query: Seq[Float],
       radius: Float,
       store: IndexStore = IndexStore.default): DataFrame = {
-    val files = IndexManager.listFiles(spark, path)
-    require(files.nonEmpty, s"no parquet files under $path")
-    val (est, bail) = rangeEstimate(spark, files, column, query.toArray, radius, store)
-    if (bail) {
-      import graft.functions.{array_distance, float_vector}
-      return spark.read.parquet(path)
-        .where(array_distance(col(column), float_vector(query)) < lit(radius))
-    }
+    val files = listed(spark, path)
+    val range = rangeEstimate(spark, files, column, query.toArray, radius, store)
+    if (range.bail)
+      return spark.read.parquet(path).where(distanceCol(column, query) < lit(radius))
     val winners = rangeWinners(spark, path, column, query, radius, store)
       .select(col("_file"), col("_ri"))
-    // stats-driven broadcast like candidateScan: even below the bailout a
-    // broad radius can make the key set too large to broadcast safely
-    val estBytes = est * keyRowBytes(files)
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val winnerSide =
-      if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(winners) else winners
     val fetched = spark.read.parquet(path)
       .withColumn("_file", col("_metadata.file_path"))
       .withColumn("_ri", col("_metadata.row_index"))
-      .join(winnerSide, Seq("_file", "_ri"), "left_semi")
+      .join(range.keySide(winners), Seq("_file", "_ri"), "left_semi")
       .drop("_file", "_ri")
     meterFetch(spark, fetched)
   }
 
-  /** IVF-SQ8 phase 1+2 as a lazy `(_file, _ri, _dist)` feed of the
-    * `k·oversample` refine survivors with EXACT distances:
+  /** Bounded max-heap of the `keep` smallest (key, ordinal) pairs, ties
+    * broken toward the lower ordinal (deterministic, like coarseTopK's id
+    * tie-break) — each task's coarse cut, so no full candidate list leaves
+    * a task.
+    */
+  private final class KeepHeap(keep: Int) {
+    private val heap = new java.util.PriorityQueue[(Double, Int)](
+      math.max(1, math.min(keep, 1024)),
+      (a: (Double, Int), b: (Double, Int)) => {
+        val c = java.lang.Double.compare(b._1, a._1)
+        if (c != 0) c else Integer.compare(b._2, a._2)
+      })
+
+    def push(d: Double, ri: Int): Unit =
+      if (heap.size < keep) heap.add((d, ri)): Unit
+      else {
+        val worst = heap.peek()
+        if (d < worst._1 || (d == worst._1 && ri < worst._2)) {
+          heap.poll(); heap.add((d, ri)): Unit
+        }
+      }
+
+    def drain(file: String): Iterator[(String, Long, Double)] =
+      Iterator.continually(heap.poll()).takeWhile(_ != null)
+        .map { case (d, ri) => (file, ri.toLong, d) }
+  }
+
+  /** Quantized phase 1+2 (`Options.tier` = [[Tier.Sq8]] or [[Tier.Pq]]) as
+    * a lazy `(_file, _ri, _dist)` feed of the `k·oversample` refine
+    * survivors with EXACT distances:
     *
     *  1. coarse — each executor task probes its files' indexes and ranks
-    *     candidates by integer code-space L2 read from the [[Sq8Sidecar]]
-    *     (`dim` bytes per candidate, point reads; a per-file bounded heap
-    *     keeps `k·oversample`, so no full candidate list leaves a task);
+    *     candidates on the tier's code sidecar (point reads of `dim` bytes
+    *     per candidate for SQ8, `m` bytes for PQ — 32× under floats at
+    *     m = dim/8), keeping its `k·oversample` best in a [[KeepHeap]];
+    *     the global cut orders by (key, file, ordinal);
     *  2. refine — the surviving (file, ordinal) pairs regroup per file and
-    *     only THEIR full-precision floats are read ([[SelectiveFetch]]).
+    *     only THEIR full-precision floats are read ([[SelectiveFetch]]),
+    *     emitting exact distances in the query's metric.
     *
     * Float IO is `k·oversample` rows regardless of candidate volume — the
-    * IVF-SQ8 (faiss `IndexIVFScalarQuantizer`-style) asymptotic.
+    * IVF-SQ8 / IVF-PQ (faiss `IndexIVFScalarQuantizer` / `IndexIVFPQ`)
+    * asymptotic. The SQL rewrite calls this with the scan's file set when
+    * `spark.graft.ivf.tier` resolves to sq8, pq or pqr.
     */
-  private def quantizedWinners(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options,
-      oversample: Int,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame =
-    quantizedWinnersByFiles(
-      spark, IndexManager.listFiles(spark, path), column, query, k, options,
-      oversample, store, cosine)
-
-  /** File-list form of the SQ8 winner feed — the SQL rewrite rule calls this
-    * directly with the scan's (already enumerated) file set when
-    * `spark.graft.ivf.tier=sq8`.
-    */
-  private[graft] def quantizedWinnersByFiles(
+  private[graft] def quantizedWinners(
       spark: SparkSession,
       files: Seq[String],
       column: String,
       query: Seq[Float],
       k: Int,
       options: Options,
-      oversample: Int,
-      store: IndexStore,
-      cosine: Boolean = false): DataFrame = {
+      store: IndexStore): DataFrame = {
     import spark.implicits._
     require(k > 0, "k must be > 0")
-    require(oversample >= 1, "oversample must be >= 1")
     require(files.nonEmpty, "no parquet files to search")
     val q = query.toArray
-    IndexStore.memoizedTableProbe(
-      s"validate-sq8-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
-        require(
-          Sq8Sidecar.usable(store, file, column),
-          s"no usable SQ8 sidecar for file $file column '$column' (absent, stale " +
-            "binding, or damaged) — build one with Sq8Sidecar.ensure")
-      }
+    val (oversample, tag, sidecar, coarse) = options.tier match {
+      case Tier.Sq8(os) =>
+        (os, "sq8",
+          (file: String) => require(
+            Sq8Sidecar.usable(store, file, column),
+            s"no usable SQ8 sidecar for file $file column '$column' (absent, stale " +
+              "binding, or damaged) — build one with Sq8Sidecar.ensure"),
+          sq8Coarse(store, column, q, options))
+      case Tier.Pq(os, residual) =>
+        (os, s"pq-$residual",
+          // existsPq (not usable()): a PRESENT sidecar from a dead centroid
+          // epoch must reach the reader's specific stale-epoch refusal
+          // (rebuilt via ensure), not a generic absent message
+          (file: String) => require(
+            store.existsPq(file, column, residual),
+            s"no ${if (residual) "residual " else ""}PQ sidecar for file $file column " +
+              s"'$column' — build one with PqSidecar.build"),
+          pqCoarse(store, column, q, options, residual))
+      case Tier.Float =>
+        throw new IllegalArgumentException("quantizedWinners serves the Sq8 and Pq tiers")
     }
+    validateIndexed(files, column, q.length, store, tag, sidecar)
     val sc = spark.sparkContext
     val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
     val colName = column
-    val nprobe = options.nprobe
-    val angular = cosine
-    val qCodes = graft.functions.Sq8.encode(q)
+    val angular = options.cosine
     val keep = math.min(k.toLong * oversample, Int.MaxValue.toLong).toInt
 
-    val coarse = sc.parallelize(files, slices).flatMap { file =>
-      val index = IndexManager.loadIndex(store, file, colName)
-      // candidateRows concatenates per-cell posting lists — not globally
-      // ascending at nprobe > 1. readRows requires ascending ordinals (its
-      // bounds check and run-coalescing depend on it), and the heap below is
-      // order-independent, so sorting here is free of semantic effect.
-      val cands =
-        if (angular) index.candidateRowsCosine(q, nprobe)
-        else index.candidateRows(q, nprobe)
-      java.util.Arrays.sort(cands)
-      val codes = Sq8Sidecar.readRows(store.codesPath(file, colName), cands)
-      // bounded max-heap of the keep smallest (idist, ri) — deterministic
-      // tie-break on ordinal, like coarseTopK's id tie-break. L2 keys are
-      // integer distanceSq values (exact in a Double far below 2^53);
-      // angular keys are the code-grid 1 − cos — coarse either way, the
-      // float refine below restores the exact metric.
-      val heap = new java.util.PriorityQueue[(Double, Int)](
-        math.max(1, math.min(keep, cands.length)),
-        (a: (Double, Int), b: (Double, Int)) => {
-          val c = java.lang.Double.compare(b._1, a._1)
-          if (c != 0) c else Integer.compare(b._2, a._2)
-        })
-      var i = 0
-      while (i < cands.length) {
-        if (codes(i).length == qCodes.length) {
-          val d =
-            if (angular) graft.functions.Sq8.angularDist(qCodes, codes(i))
-            else graft.functions.Sq8.distanceSq(qCodes, codes(i)).toDouble
-          if (heap.size < keep) heap.add((d, cands(i)))
-          else {
-            val worst = heap.peek()
-            if (d < worst._1 || (d == worst._1 && cands(i) < worst._2)) {
-              heap.poll(); heap.add((d, cands(i)))
-            }
-          }
-        }
-        i += 1
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(String, Long, Double)](heap.size)
-      while (!heap.isEmpty) {
-        val (d, ri) = heap.poll()
-        out += ((file, ri.toLong, d))
-      }
-      out.iterator
+    val perFile = sc.parallelize(files, slices).flatMap { file =>
+      val heap = new KeepHeap(keep)
+      coarse(file, IndexManager.loadIndex(store, file, colName), heap)
+      heap.drain(file)
     }
-    val survivors = spark.createDataset(coarse).toDF("_file", "_ri", "_idist")
-      .orderBy(col("_idist"), col("_file"), col("_ri"))
+    val survivors = spark.createDataset(perFile).toDF("_file", "_ri", "_key")
+      .orderBy(col("_key"), col("_file"), col("_ri"))
       .limit(keep)
       .as[(String, Long, Double)]
 
@@ -794,125 +777,59 @@ object VectorTopK {
       .flatMapGroups { (file, rows) =>
         val ordinals = rows.map(_._2.toInt).toArray.sorted
         SelectiveFetch.embeddings(file, colName, ordinals).iterator.collect {
-          case (ri, vec) if vec.length == q.length =>
-            val d =
-              if (angular) 1.0f - graft.functions.VectorKernels.cosine(vec, q)
-              else math.sqrt(
-                graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat
-            (file, ri, d)
+          case (ri, vec) if vec.length == q.length => (file, ri, exactDist(vec, q, angular))
         }
       }
     refined.toDF("_file", "_ri", "_dist")
   }
 
-  /** IVF-PQ phase 1+2 as a lazy `(_file, _ri, _dist)` feed — the PQ twin of
-    * [[quantizedWinners]]: coarse ranks candidates by ADC (one `m × ksub`
-    * exact query-to-centroid table per task, then `m` byte lookups per
-    * candidate — coarse IO is `m` bytes/candidate, 32× under floats at
-    * m = dim/8), exact float refine of the `k·oversample` survivors.
+  /** SQ8 coarse scorer: integer code-space L2 read from the [[Sq8Sidecar]]
+    * (exact in a Double far below 2^53), or the code-grid 1 − cos for
+    * angular queries — coarse either way; the float refine restores the
+    * exact metric.
     */
-  private def pqWinners(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options,
-      oversample: Int,
+  private def sq8Coarse(
       store: IndexStore,
-      residual: Boolean,
-      cosine: Boolean = false): DataFrame =
-    pqWinnersByFiles(
-      spark, IndexManager.listFiles(spark, path), column, query, k, options,
-      oversample, store, residual, cosine)
-
-  /** File-list form of the PQ/ADC winner feed — the SQL rewrite rule calls
-    * this directly when `spark.graft.ivf.tier=pq` (or `pqr`).
-    */
-  private[graft] def pqWinnersByFiles(
-      spark: SparkSession,
-      files: Seq[String],
       column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options,
-      oversample: Int,
-      store: IndexStore,
-      residual: Boolean,
-      cosine: Boolean = false): DataFrame = {
-    import spark.implicits._
-    require(k > 0, "k must be > 0")
-    require(oversample >= 1, "oversample must be >= 1")
-    require(files.nonEmpty, "no parquet files to search")
-    val q = query.toArray
-    IndexStore.memoizedTableProbe(
-      s"validate-pq-$residual-${q.length}", column, files, store.dir) {
-      files.foreach { file =>
-        val (dim, _) = IndexManager.cachedPeekStrict(store, file, column)
-          .getOrElse(throw new IllegalStateException(
-            s"no IVF index for file $file column '$column' — build one with IvfBuilder"))
-        require(dim == q.length, s"query dim ${q.length} != index dim $dim for $file")
-        // existsPq (not usable()): a PRESENT sidecar from a dead centroid
-        // epoch must reach the reader's specific stale-epoch refusal
-        // (rebuilt via ensure), not a generic absent message
-        require(
-          store.existsPq(file, column, residual),
-          s"no ${if (residual) "residual " else ""}PQ sidecar for file $file column " +
-            s"'$column' — build one with PqSidecar.build")
+      q: Array[Float],
+      options: Options): (String, IvfIndex, KeepHeap) => Unit = {
+    val (nprobe, angular) = (options.nprobe, options.cosine)
+    val qCodes = graft.functions.Sq8.encode(q)
+    (file, index, heap) => {
+      // candidateRows concatenates per-cell posting lists — not globally
+      // ascending at nprobe > 1. readRows requires ascending ordinals (its
+      // bounds check and run-coalescing depend on it), and the heap is
+      // order-independent, so sorting here is free of semantic effect.
+      val cands =
+        if (angular) index.candidateRowsCosine(q, nprobe)
+        else index.candidateRows(q, nprobe)
+      java.util.Arrays.sort(cands)
+      val codes = Sq8Sidecar.readRows(store.codesPath(file, column), cands)
+      var i = 0
+      while (i < cands.length) {
+        if (codes(i).length == qCodes.length)
+          heap.push(
+            if (angular) graft.functions.Sq8.angularDist(qCodes, codes(i))
+            else graft.functions.Sq8.distanceSq(qCodes, codes(i)).toDouble,
+            cands(i))
+        i += 1
       }
     }
-    val sc = spark.sparkContext
-    val slices = math.max(1, math.min(files.size, sc.defaultParallelism))
-    val colName = column
-    val nprobe = options.nprobe
-    val keep = math.min(k.toLong * oversample, Int.MaxValue.toLong).toInt
-    val wantResidual = residual
-    val angular = cosine
-    val qNorm = math.sqrt(graft.functions.VectorKernels.dot(q, q).toDouble)
+  }
 
-    val coarse = sc.parallelize(files, slices).flatMap { file =>
-      val index = IndexManager.loadIndex(store, file, colName)
-      val sidecar = store.pqPath(file, colName, wantResidual)
-      // open-once reader: the residual branch reads per probed cell, so
-      // reopening per cell would be nprobe redundant opens per task; the
-      // codebook comes from the process-wide digest-keyed LRU, so a
-      // multi-file table decodes it once per JVM and every other file
-      // costs a 36-byte header read
-      val reader = new PqSidecar.Reader(sidecar)
-      val header = reader.header
-      require(
-        header.residual == wantResidual,
-        s"PQ sidecar variant mismatch for $file (flags=${header.flags})")
-      // refuse-don't-guess: residual codes quantize vec − cellCentroid, so a
-      // retrain that moved the centroids makes them garbage under the new
-      // ADC tables — a digest mismatch is a hard error, never a recall drop
-      if (wantResidual) require(
-        header.centroidDigest == index.centroidDigest,
-        s"stale residual PQ sidecar for $file: codes were encoded under " +
-          s"centroid epoch ${header.centroidDigest} but the index is now " +
-          s"${index.centroidDigest} (retrained since encode) — rebuild with " +
-          "PqSidecar.ensure")
-      val cb = reader.codebook
-      require(
-        cb.dim == q.length,
-        s"query dim ${q.length} != PQ codebook dim ${cb.dim} for $file")
-      // bounded max-heap of the keep smallest (adc, ri); deterministic
-      // ordinal tie-break like the SQ8 path
-      val heap = new java.util.PriorityQueue[(Float, Int)](
-        math.max(1, keep),
-        (a: (Float, Int), b: (Float, Int)) => {
-          val c = java.lang.Float.compare(b._1, a._1)
-          if (c != 0) c else Integer.compare(b._2, a._2)
-        })
-      def push(d: Float, ri: Int): Unit = {
-        if (heap.size < keep) heap.add((d, ri))
-        else {
-          val worst = heap.peek()
-          if (d < worst._1 || (d == worst._1 && ri < worst._2)) {
-            heap.poll(); heap.add((d, ri)): Unit
-          }
-        }
-      }
+  /** PQ coarse scorer: ADC (one `m × ksub` exact query-to-centroid table,
+    * then `m` byte lookups per candidate). Keys are the Float ADC values
+    * widened to Double, which keeps their order and ties.
+    */
+  private def pqCoarse(
+      store: IndexStore,
+      column: String,
+      q: Array[Float],
+      options: Options,
+      wantResidual: Boolean): (String, IvfIndex, KeepHeap) => Unit = {
+    val (nprobe, angular) = (options.nprobe, options.cosine)
+    val qNorm = math.sqrt(graft.functions.VectorKernels.dot(q, q).toDouble)
+    (file, index, heap) => {
       // code-space 1 − cos from per-(subspace, entry) tables: dot(q, x̂) and
       // ‖x̂‖² are EXACT sums over the code (subspaces partition coordinates),
       // so the only approximation is x̂ itself — coarse ranking, the float
@@ -920,7 +837,30 @@ object VectorTopK {
       def angularKey(dot: Double, normSq: Double): Float =
         if (qNorm == 0.0 || normSq <= 0.0) 2.0f
         else (1.0 - dot / (qNorm * math.sqrt(normSq))).toFloat
+      // open-once reader: the residual branch reads per probed cell, so
+      // reopening per cell would be nprobe redundant opens per task; the
+      // codebook comes from the process-wide digest-keyed LRU, so a
+      // multi-file table decodes it once per JVM and every other file
+      // costs a 36-byte header read
+      val reader = new PqSidecar.Reader(store.pqPath(file, column, wantResidual))
       try {
+        val header = reader.header
+        require(
+          header.residual == wantResidual,
+          s"PQ sidecar variant mismatch for $file (flags=${header.flags})")
+        // refuse-don't-guess: residual codes quantize vec − cellCentroid, so a
+        // retrain that moved the centroids makes them garbage under the new
+        // ADC tables — a digest mismatch is a hard error, never a recall drop
+        if (wantResidual) require(
+          header.centroidDigest == index.centroidDigest,
+          s"stale residual PQ sidecar for $file: codes were encoded under " +
+            s"centroid epoch ${header.centroidDigest} but the index is now " +
+            s"${index.centroidDigest} (retrained since encode) — rebuild with " +
+            "PqSidecar.ensure")
+        val cb = reader.codebook
+        require(
+          cb.dim == q.length,
+          s"query dim ${q.length} != PQ codebook dim ${cb.dim} for $file")
         if (header.residual) {
           // IVF-ADC: codes quantize vec − cellCentroid, so the ADC table is
           // per probed cell, built from query − cellCentroid (exact identity
@@ -950,14 +890,14 @@ object VectorTopK {
                   val n2 = cellNormSq +
                     2.0 * Pq.adcDistanceSq(crossT, codes(i), cb.ksub) +
                     Pq.adcDistanceSq(normT, codes(i), cb.ksub)
-                  push(angularKey(dot, n2), ords(i))
+                  heap.push(angularKey(dot, n2), ords(i))
                   i += 1
                 }
               } else {
                 val table = Pq.adcTable(Pq.residual(q, cent), cb)
                 var i = 0
                 while (i < ords.length) {
-                  push(Pq.adcDistanceSq(table, codes(i), cb.ksub), ords(i))
+                  heap.push(Pq.adcDistanceSq(table, codes(i), cb.ksub), ords(i))
                   i += 1
                 }
               }
@@ -976,215 +916,20 @@ object VectorTopK {
             while (i < cands.length) {
               val dot = Pq.adcDistanceSq(dotT, codes(i), cb.ksub).toDouble
               val n2 = Pq.adcDistanceSq(normT, codes(i), cb.ksub).toDouble
-              push(angularKey(dot, n2), cands(i))
+              heap.push(angularKey(dot, n2), cands(i))
               i += 1
             }
           } else {
             val table = Pq.adcTable(q, cb)
             var i = 0
             while (i < cands.length) {
-              push(Pq.adcDistanceSq(table, codes(i), cb.ksub), cands(i))
+              heap.push(Pq.adcDistanceSq(table, codes(i), cb.ksub), cands(i))
               i += 1
             }
           }
         }
       } finally reader.close()
-      val out = new scala.collection.mutable.ArrayBuffer[(String, Long, Float)](heap.size)
-      while (!heap.isEmpty) {
-        val (d, ri) = heap.poll()
-        out += ((file, ri.toLong, d))
-      }
-      out.iterator
     }
-    val survivors = spark.createDataset(coarse).toDF("_file", "_ri", "_adc")
-      .orderBy(col("_adc"), col("_file"), col("_ri"))
-      .limit(keep)
-      .as[(String, Long, Float)]
-
-    val refined = survivors
-      .groupByKey(_._1)
-      .flatMapGroups { (file, rows) =>
-        val ordinals = rows.map(_._2.toInt).toArray.sorted
-        SelectiveFetch.embeddings(file, colName, ordinals).iterator.collect {
-          case (ri, vec) if vec.length == q.length =>
-            val d =
-              if (angular) 1.0f - graft.functions.VectorKernels.cosine(vec, q)
-              else math.sqrt(
-                graft.functions.VectorKernels.squaredL2(vec, q).toDouble).toFloat
-            (file, ri, d)
-        }
-      }
-    refined.toDF("_file", "_ri", "_dist")
   }
 
-  /** IVF-PQ programmatic search ([[SearchResult]] shape): ADC candidate
-    * ranking on `m`-byte product codes, exact float re-rank of the
-    * `k·oversample` survivors. Exact when `nprobe >= nClusters` AND
-    * `k·oversample` covers the candidate volume (every candidate survives
-    * coarse, refine is exact float space — ADC quality then only affects
-    * which EXTRA rows ride along); otherwise approximate with recall
-    * governed by (nprobe, oversample, codebook fit).
-    */
-  def searchPq(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 8,
-      store: IndexStore = IndexStore.default,
-      residual: Boolean = false): Dataset[SearchResult] = {
-    import spark.implicits._
-    pqWinners(spark, path, column, query, k, options, oversample, store, residual)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
-
-  /** IVF-PQ plan-integrated top-k: PQ winners → k-row payload broadcast
-    * semi-join (the [[indexedQuantized]] shape with `m`-byte coarse codes).
-    */
-  def indexedPq(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 8,
-      store: IndexStore = IndexStore.default,
-      residual: Boolean = false): DataFrame = {
-    winnersThenFetch(
-      spark, path, column, query, k,
-      pqWinners(spark, path, column, query, k, options, oversample, store, residual))
-  }
-
-  /** IVF-SQ8 programmatic search ([[SearchResult]] shape, like [[search]]):
-    * candidate ranking on int8 code sidecars, exact float re-rank of the
-    * `k·oversample` survivors. Exact when `nprobe >= nClusters` AND
-    * `k·oversample` covers the candidate volume; otherwise approximate with
-    * recall governed by (nprobe, oversample).
-    */
-  def searchQuantized(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 4,
-      store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
-    import spark.implicits._
-    quantizedWinners(spark, path, column, query, k, options, oversample, store)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
-
-  /** IVF-SQ8 plan-integrated top-k: quantized winners → k-row payload
-    * broadcast semi-join, the two-phase [[indexed]] shape with the coarse
-    * phase reading codes instead of floats.
-    */
-  def indexedQuantized(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 4,
-      store: IndexStore = IndexStore.default): DataFrame = {
-    winnersThenFetch(
-      spark, path, column, query, k,
-      quantizedWinners(spark, path, column, query, k, options, oversample, store))
-  }
-
-  /** Angular twin of [[searchQuantized]] ([[searchCosine]]'s result
-    * convention: `distance` = 1 − cos, ascending): angular cell probe,
-    * code-grid integer dot/norm coarse ranking, exact float 1 − cos
-    * re-rank of the `k·oversample` survivors — the programmatic form of
-    * the SQL tier's vq20 path, same exactness argument.
-    */
-  def searchQuantizedCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 4,
-      store: IndexStore = IndexStore.default): Dataset[SearchResult] = {
-    import spark.implicits._
-    quantizedWinners(
-      spark, path, column, query, k, options, oversample, store, cosine = true)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
-
-  /** Angular twin of [[indexedQuantized]]: payload rows of the k most
-    * cosine-similar vectors via the quantized angular winner feed.
-    */
-  def indexedQuantizedCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 4,
-      store: IndexStore = IndexStore.default): DataFrame = {
-    winnersThenFetch(
-      spark, path, column, query, k,
-      quantizedWinners(
-        spark, path, column, query, k, options, oversample, store, cosine = true),
-      cosine = true)
-  }
-
-  /** Angular twin of [[searchPq]]: reconstruction-cosine coarse ranking
-    * from per-(subspace, entry) dot/norm(/cross) tables, exact float
-    * 1 − cos re-rank — the programmatic form of the SQL tier's vq21 path.
-    */
-  def searchPqCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 8,
-      store: IndexStore = IndexStore.default,
-      residual: Boolean = false): Dataset[SearchResult] = {
-    import spark.implicits._
-    pqWinners(
-      spark, path, column, query, k, options, oversample, store, residual,
-      cosine = true)
-      .select(col("_ri").as("row_idx"), col("_dist").as("distance"))
-      .orderBy(col("distance").asc_nulls_last)
-      .limit(k)
-      .as[SearchResult]
-  }
-
-  /** Angular twin of [[indexedPq]]. */
-  def indexedPqCosine(
-      spark: SparkSession,
-      path: String,
-      column: String,
-      query: Seq[Float],
-      k: Int,
-      options: Options = Options(),
-      oversample: Int = 8,
-      store: IndexStore = IndexStore.default,
-      residual: Boolean = false): DataFrame = {
-    winnersThenFetch(
-      spark, path, column, query, k,
-      pqWinners(
-        spark, path, column, query, k, options, oversample, store, residual,
-        cosine = true),
-      cosine = true)
-  }
 }

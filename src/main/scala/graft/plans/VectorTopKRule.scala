@@ -14,6 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
 
 import graft.functions.{ArrayCosineSimilarity, ArrayDistance, ArraySquaredL2}
 import graft.ivf.IndexStore
+import graft.ivf.VectorTopK.Tier
 
 /** SQL-transparent IVF acceleration: rewrites
   * `ORDER BY array_distance(col, literal-vector) ASC LIMIT k` over a single
@@ -364,16 +365,7 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val nprobe = conf(NprobeKey, "5").toInt
     val maxCandidates = conf(MaxCandidatesKey, "").toIntOption
 
-    // any unindexed file, dim mismatch, or unreadable header: no rewrite
-    // table-level dir-identity memo over the per-file dim peeks: a repeat
-    // plan against an unchanged table answers in O(1) stats (see
-    // IndexStore.memoizedTableProbe); per-file peeks run on invalidation
-    if (!IndexStore.memoizedTableProbe(
-        s"table-peek-dim-${query.length}", column, files, store.dir)(
-        IndexStore.forallFiles(files)(file =>
-          graft.ivf.IndexManager.cachedPeek(store, file, column)
-            .exists(_._1 == query.length))))
-      return None
+    if (!allIndexedAtDim(files, column, query.length, store)) return None
     val (feed, tierReason) =
       if (filterFree) tierFeed(files, column, query, k, nprobe, store, cosine)
       else filteredTierFeed(files, column, query, k, nprobe, store, cosine)
@@ -523,25 +515,18 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
           s"profile=cold but no usable quantized sidecar covers all ${files.size} " +
             "scan files — build PqSidecar/Sq8Sidecar (or check binding staleness)")
       }
-    val oversample = conf(OversampleKey, if (tier == "sq8") "4" else "8").toInt
-    val opts = graft.ivf.VectorTopK.Options(nprobe)
-    val resolved = s"requested=$requested resolved=$tier"
-    tier match {
-      case "sq8" if allSq8Codes() =>
-        (Some((graft.ivf.VectorTopK.quantizedWinnersByFiles(
-          spark, files, column, query.toIndexedSeq, k, opts, oversample, store,
-          cosine), tier)), resolved)
-      case "pq" | "pqr" =>
-        val residual = tier == "pqr"
-        if (allPqUsable(residual))
-          (Some((graft.ivf.VectorTopK.pqWinnersByFiles(
-            spark, files, column, query.toIndexedSeq, k, opts, oversample, store,
-            residual, cosine), tier)), resolved)
-        else silent(
-          s"requested $tier sidecar absent/stale on some of ${files.size} scan files")
-      case _ => silent(
-        s"requested $tier sidecar absent/stale on some of ${files.size} scan files")
-    }
+    // the tiers' own oversample defaults unless the conf overrides them
+    val oversample = spark.conf.getOption(OversampleKey).map(_.toInt)
+    val usable = if (tier == "sq8") allSq8Codes() else allPqUsable(residual = tier == "pqr")
+    if (!usable)
+      return silent(s"requested $tier sidecar absent/stale on some of ${files.size} scan files")
+    val t =
+      if (tier == "sq8") oversample.fold(Tier.Sq8())(Tier.Sq8(_))
+      else oversample.fold(Tier.Pq(residual = tier == "pqr"))(Tier.Pq(_, tier == "pqr"))
+    (Some((graft.ivf.VectorTopK.quantizedWinners(
+      spark, files, column, query.toIndexedSeq, k,
+      graft.ivf.VectorTopK.Options(nprobe, tier = t, cosine = cosine), store), tier)),
+      s"requested=$requested resolved=$tier")
   }
 
   /** Extract `(vector attribute, query literal, true-L2 radius)` from a
@@ -623,38 +608,31 @@ case class VectorTopKRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val cacheDirs = IndexStore.tableDirs(files, storeDir)
     val idBefore = IndexStore.identityOf(cacheDirs)
     val store = new IndexStore(storeDir)
-    // table-level dir-identity memo over the per-file dim peeks: a repeat
-    // plan against an unchanged table answers in O(1) stats (see
-    // IndexStore.memoizedTableProbe); per-file peeks run on invalidation
-    if (!IndexStore.memoizedTableProbe(
-        s"table-peek-dim-${query.length}", column, files, store.dir)(
-        IndexStore.forallFiles(files)(file =>
-          graft.ivf.IndexManager.cachedPeek(store, file, column)
-            .exists(_._1 == query.length))))
-      return None
+    if (!allIndexedAtDim(files, column, query.length, store)) return None
+    // the sampled-files estimate shared with the API paths decides the
+    // selectivity bailout and the broadcast-vs-shuffle key side
+    val range = graft.ivf.VectorTopK.rangeEstimate(spark, files, column, query, radius, store)
+    if (range.bail) return None
     val candDf = graft.ivf.VectorTopK
       .rangeCandidatesByFiles(spark, files, column, query.toIndexedSeq, radius, store)
       .toDF("__file", "__ri")
-    // sampled-files estimate (shared with the API paths) drives (a) the
-    // selectivity bailout — when the radius bound keeps most cells, the
-    // vectorized full scan beats the point-read fetch (index-vs-scan
-    // crossover; measured at sf0.1: a ~10%-selective radius runs 0.2 s
-    // brute vs 0.3-0.4 s pruned when pruning keeps most cells, BENCHNOTES
-    // round-5) and (b) the broadcast-vs-shuffle choice
-    val (est, totalEst) = graft.ivf.VectorTopK
-      .estimateRangeCandidates(files, column, query, radius, store)
-    val maxSelectivity = conf(RangeMaxSelectivityKey, RangeMaxSelectivityDefault).toDouble
-    if (totalEst > 0 && est.toDouble / totalEst > maxSelectivity) return None
-    val estBytes = est * graft.ivf.VectorTopK.keyRowBytes(files)
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val candSide =
-      if (threshold >= 0 && estBytes * 2 <= threshold) broadcast(candDf) else candDf
-    val pruned = graftSubtree(leaf, semiJoin(candSide))
+    val pruned = graftSubtree(leaf, semiJoin(range.keySide(candDf)))
     aliasOutput(leaf, pruned).map { p =>
       cacheRewriteIfUnchanged(cacheKey, cacheDirs, idBefore, pruned, "float", "range", served)
       p
     }
   }
+
+  /** Every file has a readable index of the query's dim — else no rewrite.
+    * A table-level dir-identity memo over the per-file header peeks: a
+    * repeat plan against an unchanged table answers in O(1) stats (see
+    * IndexStore.memoizedTableProbe); per-file peeks run on invalidation.
+    */
+  private def allIndexedAtDim(
+      files: Seq[String], column: String, dim: Int, store: IndexStore): Boolean =
+    IndexStore.memoizedTableProbe(s"table-peek-dim-$dim", column, files, store.dir)(
+      IndexStore.forallFiles(files)(file =>
+        graft.ivf.IndexManager.cachedPeek(store, file, column).exists(_._1 == dim)))
 
   /** Restricts the keyed re-read to the `(__file, __ri)` rows of `keys`. */
   private def semiJoin(keys: DataFrame): DataFrame => DataFrame =
@@ -755,8 +733,8 @@ object VectorTopKRule {
   val StorageProfileKey = "spark.graft.ivf.storageProfile"
 
   /** Refine width for the quantized tiers (`k·oversample` survivors get
-    * exact float re-ranking); defaults: 4 for sq8, 8 for pq/pqr — the
-    * programmatic APIs' defaults.
+    * exact float re-ranking); unset, each tier's own default applies
+    * (`VectorTopK.Tier`: 4 for sq8, 8 for pq/pqr).
     */
   val OversampleKey = "spark.graft.ivf.oversample"
 
@@ -779,7 +757,8 @@ object VectorTopKRule {
   val RangeEnabledKey = "spark.graft.ivf.rangeEnabled"
 
   /** Bail out of the range rewrite when the estimated candidate fraction
-    * exceeds this (first-file estimate): a barely-pruning radius makes the
+    * exceeds this (estimated from up to 4 evenly spaced files,
+    * `VectorTopK.rangeEstimate`): a barely-pruning radius makes the
     * vectorized full scan cheaper than point-read fetch — the classic
     * index-vs-scan selectivity crossover.
     */

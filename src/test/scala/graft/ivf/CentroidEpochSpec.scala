@@ -32,9 +32,11 @@ class CentroidEpochSpec extends SparkSpec {
   private def exactPq(
       dir: String, store: IndexStore, q: Seq[Float], k: Int, nClusters: Int) =
     VectorTopK
-      .searchPq(spark, dir, "vec", q, k,
-        VectorTopK.Options(nprobe = nClusters),
-        oversample = (300 + k - 1) / k, store = store, residual = true)
+      .search(spark, dir, "vec", q, k,
+        VectorTopK.Options(
+          nprobe = nClusters,
+          tier = VectorTopK.Tier.Pq((300 + k - 1) / k, residual = true)),
+        store = store)
       .collect()
 
   // row_idx is FILE-LOCAL (the reference SearchResult shape), so the

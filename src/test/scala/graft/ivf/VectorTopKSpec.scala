@@ -250,7 +250,8 @@ class VectorTopKSpec extends SparkSpec {
 
     // quantized search without codes fails fast, naming the missing piece
     val noCodes = intercept[IllegalArgumentException] {
-      VectorTopK.searchQuantized(spark, dir, "vec", Seq.fill(8)(0f), 5, store = store)
+      VectorTopK.search(spark, dir, "vec", Seq.fill(8)(0f), 5,
+        VectorTopK.Options(tier = VectorTopK.Tier.Sq8()), store = store)
     }
     assert(noCodes.getMessage.contains("SQ8 sidecar"))
 
@@ -267,15 +268,17 @@ class VectorTopKSpec extends SparkSpec {
     // coarse cut prunes nothing and the float re-rank is exact brute force
     val brute = VectorTopK.bruteForce(spark.read.parquet(dir), "vec", query, 10)
       .select("id").collect().map(_.getLong(0)).toSeq
-    val exact = VectorTopK.indexedQuantized(spark, dir, "vec", query, 10,
-      VectorTopK.Options(nprobe = built.nClusters), oversample = 30, store = store)
+    val exact = VectorTopK.indexed(spark, dir, "vec", query, 10,
+      VectorTopK.Options(nprobe = built.nClusters, tier = VectorTopK.Tier.Sq8(30)),
+      store = store)
       .select("id").collect().map(_.getLong(0)).toSeq
     assert(exact.sorted == brute.sorted)
 
-    // searchQuantized (ordinal, distance) rows equal the float-path search
+    // quantized search (ordinal, distance) rows equal the float-path search
     // exactly — same kernel, same winners at exhaustive probe
-    val sq = VectorTopK.searchQuantized(spark, dir, "vec", query, 10,
-      VectorTopK.Options(nprobe = built.nClusters), oversample = 30, store = store)
+    val sq = VectorTopK.search(spark, dir, "vec", query, 10,
+      VectorTopK.Options(nprobe = built.nClusters, tier = VectorTopK.Tier.Sq8(30)),
+      store = store)
       .collect().map(r => (r.row_idx, r.distance)).toSet
     val viaFloats = VectorTopK.search(spark, dir, "vec", query, 10,
       VectorTopK.Options(nprobe = built.nClusters), store = store)
@@ -283,8 +286,8 @@ class VectorTopKSpec extends SparkSpec {
     assert(sq == viaFloats)
 
     // tight oversample stays ANN: k rows out, all from the candidate set
-    val ann = VectorTopK.searchQuantized(spark, dir, "vec", query, 10,
-      VectorTopK.Options(nprobe = 2), oversample = 1, store = store)
+    val ann = VectorTopK.search(spark, dir, "vec", query, 10,
+      VectorTopK.Options(nprobe = 2, tier = VectorTopK.Tier.Sq8(1)), store = store)
       .collect()
     assert(ann.length == 10)
 
@@ -307,8 +310,9 @@ class VectorTopKSpec extends SparkSpec {
     }
     val brute4 = VectorTopK.bruteForce(spark.read.parquet(dir), "vec", query, 10)
       .select("id").collect().map(_.getLong(0)).toSeq
-    val exact4 = VectorTopK.indexedQuantized(spark, dir, "vec", query, 10,
-      VectorTopK.Options(nprobe = built.nClusters), oversample = 35, store = store)
+    val exact4 = VectorTopK.indexed(spark, dir, "vec", query, 10,
+      VectorTopK.Options(nprobe = built.nClusters, tier = VectorTopK.Tier.Sq8(35)),
+      store = store)
       .select("id").collect().map(_.getLong(0)).toSeq
     assert(exact4.sorted == brute4.sorted)
   }
@@ -568,14 +572,14 @@ class VectorTopKSpec extends SparkSpec {
       spark, path, IvfBuilder.Config("vec", nClusters = Some(2)), store)
     val q = Seq(1.0f, 0.0f)
     val got = VectorTopK
-      .indexedCosine(spark, path, "vec", q, 2,
-        VectorTopK.Options(nprobe = build.nClusters), store = store)
+      .indexed(spark, path, "vec", q, 2,
+        VectorTopK.Options(nprobe = build.nClusters, cosine = true), store = store)
       .select("id").collect().map(_.getInt(0)).toSeq
     assert(got == Seq(0, 1), s"expected cosine order [0, 1], got $got")
     // and the SearchResult twin agrees (distance = 1 - cos ascending)
     val sr = VectorTopK
-      .searchCosine(spark, path, "vec", q, 2,
-        VectorTopK.Options(nprobe = build.nClusters), store = store)
+      .search(spark, path, "vec", q, 2,
+        VectorTopK.Options(nprobe = build.nClusters, cosine = true), store = store)
       .collect()
     assert(sr.map(_.row_idx).toSeq == Seq(0L, 1L))
     assert(sr(0).distance < sr(1).distance)
@@ -584,14 +588,18 @@ class VectorTopKSpec extends SparkSpec {
     // right winner SET, wrong head row on non-unit-norm data)
     graft.ivf.Sq8Sidecar.ensure(spark, path, "vec", store)
     val gotSq8 = VectorTopK
-      .indexedQuantizedCosine(spark, path, "vec", q, 2,
-        VectorTopK.Options(nprobe = build.nClusters), oversample = 4, store = store)
+      .indexed(spark, path, "vec", q, 2,
+        VectorTopK.Options(
+          nprobe = build.nClusters, tier = VectorTopK.Tier.Sq8(4), cosine = true),
+        store = store)
       .select("id").collect().map(_.getInt(0)).toSeq
     assert(gotSq8 == Seq(0, 1), s"sq8 twin: expected cosine order [0, 1], got $gotSq8")
     graft.ivf.PqSidecar.ensure(spark, path, "vec", m = 2, store = store)
     val gotPq = VectorTopK
-      .indexedPqCosine(spark, path, "vec", q, 2,
-        VectorTopK.Options(nprobe = build.nClusters), oversample = 4, store = store)
+      .indexed(spark, path, "vec", q, 2,
+        VectorTopK.Options(
+          nprobe = build.nClusters, tier = VectorTopK.Tier.Pq(4), cosine = true),
+        store = store)
       .select("id").collect().map(_.getInt(0)).toSeq
     assert(gotPq == Seq(0, 1), s"pq twin: expected cosine order [0, 1], got $gotPq")
   }
